@@ -3,7 +3,6 @@ package graft
 import graft.core._
 import graft.queries.RefQueries
 import graft.simple.Simple
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: the B1–B5 set from /root/repo/BASELINE.md.
   *
@@ -112,18 +111,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // NOTE: sf0.1 parquet files are single-row-group, so lowering
-      // spark.sql.files.maxPartitionBytes cannot parallelize the scan
-      // (measured: it only adds empty-split overhead)
-      .getOrCreate()
+    // NOTE: sf0.1 parquet files are single-row-group, so lowering
+    // spark.sql.files.maxPartitionBytes cannot parallelize the scan
+    // (measured: it only adds empty-split overhead)
+    val spark = GraftSession.builder().getOrCreate()
+    val batchPartitions = spark.conf.get("spark.sql.shuffle.partitions")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -159,17 +151,19 @@ object Bench {
     // throughput-driven drain that doubles the RocksDB commit count
     // for zero extra rows — timers still fire, one batch later, on
     // the data path (the dedup operator re-checks TTL on arrival, so
-    // emitted rows are IDENTICAL — StreamKnobBench verifies the row
-    // set under both settings; measured r18: b9 4.20→3.63 s, b10
-    // 6.92→4.82 s on the same box).  The trade is timer PROMPTNESS on
-    // idle streams, which a drain benchmark (and any
-    // throughput-oriented pipeline) does not pay for.  Scale-free:
+    // emitted rows are IDENTICAL — the r18 A/B tool verified the row
+    // set under both settings,
+    // `git show 6936f95:src/main/scala/graft/tools/StreamKnobBench.scala`;
+    // measured r18: b9 4.20→3.63 s, b10 6.92→4.82 s on the same box).
+    // The trade is timer PROMPTNESS on idle streams, which a drain
+    // benchmark (and any throughput-oriented pipeline) does not pay for.  Scale-free:
     // the knob halves per-batch fixed cost at any cluster size.
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     // Fourth + fifth production knobs (r19), both measured on the
-    // exact workloads first (tools/StreamKnobBench2; A/B table in
-    // OPTIMIZATION_r19.md, emitted-row signatures identical under
-    // every combination):
+    // exact workloads first
+    // (`git show 6936f95:src/main/scala/graft/tools/StreamKnobBench2.scala`;
+    // A/B table in OPTIMIZATION_r19.md, emitted-row signatures
+    // identical under every combination):
     //  - checkpoint-file checksums OFF: Spark 4.1 defaults to writing
     //    a companion checksum file beside every checkpoint file —
     //    for these blocks that doubles the state-changelog file
@@ -196,33 +190,18 @@ object Bench {
     spark.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", "100")
     spark.conf.set("spark.sql.shuffle.partitions", "8") // state sizing, see above
     val b9rows = 200000; val b9batches = 10; val b9keys = 1000
-    def deleteRec(p: java.nio.file.Path): Unit = {
-      // q.stop() returns while the RocksDB state-store maintenance
-      // thread may still be flushing this checkpoint: a file
-      // recreated between the walk and the parent rmdir throws
-      // DirectoryNotEmptyException.  Retry briefly, then leave the
-      // residue — a leaked tmp checkpoint is harmless, a crashed
-      // bench run is not.
-      def sweep(): Unit = {
-        val walked = java.nio.file.Files.walk(p)
-        try walked.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        finally walked.close()
-      }
-      var left = 5
-      while (left > 0)
-        try { sweep(); left = 0 }
-        catch {
-          case _: java.io.IOException =>
-            left -= 1
-            if (left > 0) Thread.sleep(300)
-        }
-    }
     // checkpoint dirs are deleted AFTER the timing block (deleteRec's
     // RocksDB-flush-race retry can sleep up to ~1.2 s, which must not
-    // bill to the measured number); each timed run stashes its dir here
+    // bill to the measured number); each timed run stashes its dir here.
+    // A dir that still won't go is left behind: a leaked tmp checkpoint
+    // is harmless, a crashed bench run is not.
     val doneCkpts = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def drainCkpts(): Unit = { doneCkpts.foreach(deleteRec); doneCkpts.clear() }
+    def drainCkpts(): Unit = {
+      doneCkpts.foreach { p =>
+        try graft.sources.Tables.deleteRec(p) catch { case _: java.io.IOException => () }
+      }
+      doneCkpts.clear()
+    }
     def b9run(): Unit = {
       implicit val sq = spark.sqlContext
       val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Double)]
@@ -302,7 +281,7 @@ object Bench {
 
     // batch blocks want the full shuffle width back (and the
     // streaming-only knobs restored, though nothing below streams)
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", batchPartitions)
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "true")
     spark.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", "10")

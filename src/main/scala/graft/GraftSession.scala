@@ -1,0 +1,40 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one batch-session config every graft main runs under.
+  *
+  * `builder()` returns a plain `SparkSession.Builder`, so a caller that
+  * needs something else (SpillCheck's force-spill knobs, Explain's
+  * `key=value` overrides) adds `.config(k, v)` before `getOrCreate()`.
+  */
+object GraftSession {
+
+  /** Local cores: `SPARK_GRAFT_CPUS` when set, else every core the JVM
+    * sees. */
+  private def cores: Int = sys.env.get("SPARK_GRAFT_CPUS") match {
+    case Some(raw) =>
+      val n = try raw.trim.toInt catch {
+        case _: NumberFormatException => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'")
+      }
+      require(n > 0, s"SPARK_GRAFT_CPUS must be a positive integer, got $n")
+      n
+    case None => Runtime.getRuntime.availableProcessors
+  }
+
+  def builder(): SparkSession.Builder = {
+    val n = cores
+    SparkSession.builder()
+      .master(s"local[$n]")
+      .config("spark.sql.shuffle.partitions", n.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // events.ts has shipped as both TIMESTAMP(NANOS) and
+      // TIMESTAMP_MICROS across corpus regenerations; this keeps a
+      // nanos-encoded corpus loadable (read as raw long) and
+      // Tables.eventTs dispatches on whichever shape is observed
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+  }
+}

@@ -2,41 +2,47 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * Usage: runMain graft.Verify <sfDir> <outDir> [queryName...] */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
     // optional extra args: run only these queries (local dev loop);
     // the driver's 2-arg form still dumps everything
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts has shipped as both TIMESTAMP(NANOS) and
-      // TIMESTAMP_MICROS across corpus regenerations; this keeps a
-      // nanos-encoded corpus loadable (read as raw long) and
-      // Tables.eventTs dispatches on whichever shape is observed
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val names = if (args.length > 2) args.drop(2).toSeq
+      else SparkEntry.queries.keys.toSeq
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try dump(spark, sfDir, outDir, names) finally spark.stop()
+  }
+
+  /** Writes each named query's result to `outDir/<name>` and the
+    * matching oracle SQL to `outDir/oracle_sql.json`.  A query that
+    * throws has its `outDir/<name>` removed, so an earlier run's output
+    * cannot pass the DuckDB compare in its place.  Ends with one
+    * `[verify] k of n failed` line; returns the failed names. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      names: Seq[String]): Seq[String] = {
+    val qs = SparkEntry.queries
+    val unknown = names.filterNot(qs.contains)
+    require(unknown.isEmpty,
+      s"not in SparkEntry.queries: ${unknown.mkString(", ")}")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
+    val failed = names.filterNot { name =>
+      val out = s"$outDir/$name"
       try {
-        val df = fn(spark, sfDir)
+        val df = qs(name)(spark, sfDir)
         // release any MEMORY_AND_DISK intermediates the query
         // registered (no-op for queries that registered nothing) —
         // in a finally so a failed write can't pin them for the
         // rest of the session
-        try df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        try df.coalesce(1).write.mode("overwrite").parquet(out)
         finally graft.ext.Dedup.unpersistInputsOf(df)
+        true
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        graft.sources.Tables.deleteRec(Paths.get(out))
+        false
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -51,9 +57,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    val detail = if (failed.isEmpty) "" else s": ${failed.mkString(", ")}"
+    System.err.println(s"[verify] ${failed.size} of ${names.size} failed$detail")
+    failed
   }
 }

@@ -13,7 +13,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * but one pass over the input with a k-long on-stack accumulator
   * instead of k HOF passes each materializing a same-size array.
   * This is the dominant cost of LSH signature prep
-  * (`tools/ProfileLsh` stage 3).
+  * (stage 3 of the r18 LSH profile,
+  * `git show 6936f95:src/main/scala/graft/tools/ProfileLsh.scala`).
   *
   * Returns NULL for an empty input array — matching `array_min`'s
   * null on empty, so downstream band hashes see the same values as

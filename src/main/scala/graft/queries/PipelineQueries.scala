@@ -50,14 +50,6 @@ object PipelineQueries {
 
   // ---- Scratch space for queries that exercise write paths --------------
 
-  private def deleteRec(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val walked = java.nio.file.Files.walk(p)
-      try walked.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walked.close()
-    }
-
   /** One per-PROCESS root for all gate scratch areas, removed when
     * the JVM exits.  (A `finally`-scoped delete inside the query
     * would break the contract: the returned DataFrame READS these
@@ -70,7 +62,7 @@ object PipelineQueries {
       System.getProperty("java.io.tmpdir"),
       s"graft_gate_scratch_${ProcessHandle.current().pid()}")
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try deleteRec(root) catch { case _: java.io.IOException => () }))
+      try graft.sources.Tables.deleteRec(root) catch { case _: java.io.IOException => () }))
     root
   }
 
@@ -79,7 +71,7 @@ object PipelineQueries {
     * createTempDirectory copy of the documents table every round. */
   private def scratchDir(name: String): String = {
     val d = scratchRoot.resolve(name)
-    deleteRec(d)
+    graft.sources.Tables.deleteRec(d)
     java.nio.file.Files.createDirectories(d)
     d.toString
   }

@@ -457,4 +457,27 @@ object Tables {
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
   }
+
+  /** Recursive local delete; a missing path is a no-op.  A directory
+    * can gain files while it is walked (after `q.stop()` the RocksDB
+    * state-store maintenance thread may still be flushing a
+    * checkpoint, so the parent rmdir throws DirectoryNotEmptyException),
+    * so the sweep is retried briefly; the fifth failure propagates. */
+  private[graft] def deleteRec(p: java.nio.file.Path): Unit = {
+    def sweep(): Unit = if (java.nio.file.Files.exists(p)) {
+      val walked = java.nio.file.Files.walk(p)
+      try walked.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(f => java.nio.file.Files.deleteIfExists(f))
+      finally walked.close()
+    }
+    var left = 5
+    while (left > 0)
+      try { sweep(); left = 0 }
+      catch {
+        case e: java.io.IOException =>
+          left -= 1
+          if (left == 0) throw e
+          Thread.sleep(300)
+      }
+  }
 }

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.ext.Components
 import graft.sources.TxLog
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures the streamed curation loop's LOG-GROWTH story — the
@@ -53,11 +53,7 @@ object CurationBench {
     val nBatches = args.headOption.map(_.toInt).getOrElse(1000)
     val compactEvery = args.lift(1).map(_.toInt).getOrElse(100)
     val per = args.lift(2).map(_.toInt).getOrElse(50)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

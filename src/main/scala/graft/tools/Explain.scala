@@ -1,36 +1,44 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
-/** Dump formatted physical plans for selected queries — the
-  * scale-review loop: check predicate pushdown (PushedFilters),
-  * column pruning (ReadSchema), WholeStageCodegen spans, join
-  * strategies, and shuffle counts.
-  * Usage: runMain graft.tools.Explain <sfDir> [queryName...]
+/** Plan dump for declared queries, under the production session
+  * ([[GraftSession]], extensions installed).  For each query: the
+  * initial formatted plan (predicate pushdown in PushedFilters, column
+  * pruning in ReadSchema, codegen spans, join strategies, exchanges),
+  * then the row count of a collect, then the AQE-final executed plan,
+  * where runtime shuffle reuse shows as a repeated
+  * `ShuffleQueryStage n` / `ReusedExchange`.
+  *
+  * Usage: runMain graft.tools.Explain <sfDir> <queryName...> [key=value...]
+  * (`key=value` args become session confs — e.g. disable
+  * autoBroadcastJoinThreshold to dump the plan shape a corpus too big
+  * to broadcast would take.)
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val names = if (args.length > 1) args.drop(1).toSeq
-      else Seq("q01_group_sum", "q02_filter_sum", "q15_ann_bruteforce",
-        "q17_minhash_lsh", "q19_ngram_jaccard", "q26_join_agg",
-        "q45_group_sample", "q46_pipeline_e2e", "q47_seq_pack")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the production session (SparkEntry/Bench/Verify) installs the
-      // extensions; a dump session without them would miss plan
-      // rewrites like DotProductRewrite and mis-represent ANN plans
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val (confArgs, rest) = args.toSeq.partition(_.contains('='))
+    require(rest.length >= 2,
+      "usage: graft.tools.Explain <sfDir> <queryName...> [key=value...]")
+    val sfDir = rest.head; val names = rest.tail
+    val qs = SparkEntry.queries
+    val confs = confArgs.map { a => val i = a.indexOf('='); (a.take(i), a.drop(i + 1)) }
+    val builder = GraftSession.builder()
+    confs.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val qs = graft.SparkEntry.queries
-    names.foreach { n =>
-      println(s"\n========== $n ==========")
-      qs(n)(spark, sfDir).explain("formatted")
-    }
-    spark.stop()
+    if (confs.nonEmpty) println(s"-- extra confs: ${confs.mkString(",")}")
+    try names.foreach { n =>
+      val df = qs(n)(spark, sfDir)
+      println(s"\n========== $n (initial) ==========")
+      df.explain("formatted")
+      // collect() executes df's OWN QueryExecution (a noop write would
+      // execute a fresh one and leave df's adaptive plan un-finalized);
+      // declared-query outputs are gate-sized, so the collect is tiny
+      println(s"-- rows: ${df.collect().length}")
+      println(s"\n========== $n (executed, AQE-final) ==========")
+      println(df.queryExecution.executedPlan.toString)
+      spark.catalog.clearCache()
+    } finally spark.stop()
   }
 }

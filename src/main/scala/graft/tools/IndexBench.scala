@@ -1,7 +1,10 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.ext.Dedup
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.functions._
 
 /** Measures the incremental-index claim in SCALE.md: probing a stored
@@ -18,6 +21,26 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.tools.IndexBench growth [baseDocs] [batchDocs]
   */
 object IndexBench {
+  private def session(): SparkSession = {
+    val spark = GraftSession.builder().getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  /** Counts Spark jobs from here on; each call of the returned
+    * function gives the jobs started since the previous call. */
+  private def jobWindow(spark: SparkSession): () => Long = {
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    })
+    var last = 0L
+    () => {
+      Bridge.drainListenerBus(spark)
+      val now = jobs.get(); val d = now - last; last = now; d
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("growth")) return growth(
       if (args.length > 1) args(1).toInt else 20000,
@@ -46,12 +69,7 @@ object IndexBench {
       if (args.length > 1) args(1).toInt else 10000)
     val nCorpus = if (args.nonEmpty) args(0).toInt else 20000
     val nBatch = if (args.length > 1) args(1).toInt else 500
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
 
     // deterministic pseudo-text: 8 md5 words per doc (~260 chars),
     // near-random shingle sets → realistic sparse LSH collisions
@@ -87,12 +105,7 @@ object IndexBench {
   }
 
   private def growth(base: Int, nBatch: Int): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     def docs(lo: Long, hi: Long) = spark.range(lo, hi).select(col("id"),
       concat_ws(" ",
         (0 to 7).map(k => md5(concat(col("id"), lit(s"_$k")))): _*).as("text"))
@@ -130,12 +143,7 @@ object IndexBench {
     * Usage: runMain graft.tools.IndexBench bm25 [baseDocs] [batchDocs] [batches]
     */
   private def bm25Growth(base: Int, nBatch: Int, batches: Int): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     import graft.ext.Retrieval
     // deterministic pseudo-text over a 5,000-term vocabulary: 30
     // tokens per doc, term = "w" + (id * prime) % 5000 — every doc
@@ -198,12 +206,7 @@ object IndexBench {
     * Usage: runMain graft.tools.IndexBench hybrid [baseDocs]
     */
   private def hybridGrowth(base: Int): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     import graft.ext.{AnnIndex, Retrieval}
     import spark.implicits._
     def docs(lo: Long, hi: Long) = spark.range(lo, hi).select(col("id"),
@@ -278,12 +281,7 @@ object IndexBench {
     * Usage: runMain graft.tools.IndexBench passage [baseDocs] [batchDocs]
     */
   private def passageGrowth(base: Int, nBatch: Int): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     import graft.ext.Decontaminate
     // mostly-novel tokens so the keeper table GROWS with the corpus
     // (a small shared vocabulary saturates distinct grams and the
@@ -346,12 +344,7 @@ object IndexBench {
     * Usage: runMain graft.tools.IndexBench hygiene [baseDocs] [batchDocs]
     */
   private def hygieneGrowth(base: Int, nBatch: Int): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     import graft.ext.{Dedup, Hygiene}
     import graft.ext.Hygiene.HygieneState
     // every 10th doc (id % 10 == 9, id >= 20) near-copies doc id-19:
@@ -396,18 +389,7 @@ object IndexBench {
     // per-step Spark JOB count: small batches are latency-floored by
     // the composition's fixed action count, not data volume — measure
     // it so the floor is a number, not a guess (round-14 ask)
-    val jobCount = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobCount.incrementAndGet()
-      })
-    var lastJobs = 0L
-    def stepJobs(): Long = {
-      org.apache.spark.sql.graftshim.Bridge.drainListenerBus(spark)
-      val now = jobCount.get(); val d = now - lastJobs; lastJobs = now; d
-    }
+    val stepJobs = jobWindow(spark)
     def step(n: Long): Double = {
       val t0 = System.nanoTime()
       Hygiene.hygieneStep(docs(size, size + n), batchId, "doc_id", "text",
@@ -482,12 +464,7 @@ object IndexBench {
     * Usage: runMain graft.tools.IndexBench purge [baseDocs] [batchDocs]
     */
   private def purgeBench(base: Int, nBatch: Int): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     import graft.ext.{Dedup, Hygiene, Purge}
     import graft.ext.Hygiene.HygieneState
     // the hygieneGrowth corpus generator, verbatim (same dup pattern,
@@ -519,18 +496,7 @@ object IndexBench {
     Dedup.writeLshIndex(allDocs.where(lit(false)), "doc_id", "text",
       st.lshName)
     graft.sources.Tables.dropWithLocation(spark, s"${st.lshName}_batches")
-    val jobCount = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobCount.incrementAndGet()
-      })
-    var lastJobs = 0L
-    def windowJobs(): Long = {
-      org.apache.spark.sql.graftshim.Bridge.drainListenerBus(spark)
-      val now = jobCount.get(); val d = now - lastJobs; lastJobs = now; d
-    }
+    val windowJobs = jobWindow(spark)
     var size = 0L
     var batchId = 0L
     def step(n: Long): Unit = {
@@ -583,11 +549,7 @@ object IndexBench {
     * Usage: runMain graft.tools.IndexBench pasbloom [rows] [probes]
     */
   private def passageBloom(rows: Int, probes: Int): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("pasbloom").toString
     // uniform 60-bit hashes, the keeper table's real distribution
@@ -603,7 +565,7 @@ object IndexBench {
       .collect().map(_.getLong(0)).toSeq
     def measure(path: String, label: String): Unit = {
       val bytes = new java.util.concurrent.atomic.AtomicLong
-      val l = new org.apache.spark.scheduler.SparkListener {
+      val l = new SparkListener {
         override def onStageCompleted(
             sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
           bytes.addAndGet(sc.stageInfo.taskMetrics.inputMetrics.bytesRead)
@@ -613,7 +575,7 @@ object IndexBench {
       val n = spark.read.parquet(path)
         .where(col("h").isin(probeVals: _*)).count()
       val t = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graftshim.Bridge.drainListenerBus(spark)
+      Bridge.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(l)
       println(f"$label rows=$rows probes=$probes matched=$n " +
         f"time_s=$t%.2f input_bytes=${bytes.get()}%,d")
@@ -636,12 +598,7 @@ object IndexBench {
     * Usage: runMain graft.tools.IndexBench repairids [rows]
     */
   private def repairIdsBoundary(rows: Int): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     val dir = java.nio.file.Files.createTempDirectory("repairids").toString
     spark.range(rows.toLong).select(col("id"),
       concat_ws(" ",
@@ -693,12 +650,7 @@ object IndexBench {
     * scans the purge-free fold already does, independent of m.
     * Usage: runMain graft.tools.IndexBench familypurge [baseDocs] */
   private def familyPurgeBench(base: Int): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     import graft.ext.{AnnIndex, Purge, Retrieval}
     val size = 16L * base
     def docs(lo: Long, hi: Long) = spark.range(lo, hi).select(
@@ -712,18 +664,7 @@ object IndexBench {
       array((0 until 8).map(d =>
         cos(col("id") * lit(0.37 + d * 0.11)).cast("float")): _*)
         .as("embedding"))
-    val jobCount = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobCount.incrementAndGet()
-      })
-    var lastJobs = 0L
-    def windowJobs(): Long = {
-      org.apache.spark.sql.graftshim.Bridge.drainListenerBus(spark)
-      val now = jobCount.get(); val d = now - lastJobs; lastJobs = now; d
-    }
+    val windowJobs = jobWindow(spark)
     def timed(f: => Unit): (Double, Long) = {
       windowJobs()
       val t0 = System.nanoTime(); f

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Spill-regime correctness slice: the gate always runs with 128 GiB
   * of headroom, so its external sort/aggregate paths never spill —
@@ -70,7 +69,7 @@ object SpillCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 1) args(1) else "/tmp/spill_out"
-    val spark = SparkSession.builder().master("local[8]")
+    val spark = graft.GraftSession.builder()
       // 2 shuffle partitions concentrate each operator's data into
       // few tasks; the force thresholds make those tasks spill for
       // real (UnsafeExternalSorter path) and drive hash agg through
@@ -78,10 +77,6 @@ object SpillCheck {
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.shuffle.spill.numElementsForceSpillThreshold", "2000")
       .config("spark.sql.TungstenAggregate.testFallbackStartsAt", "100,500")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     var spilledMem = 0L; var spilledDisk = 0L
@@ -92,28 +87,11 @@ object SpillCheck {
           spilledDisk += m.diskBytesSpilled
         }
     })
-    new java.io.File(outDir).mkdirs()
-    Slice.foreach { name =>
-      graft.SparkEntry.queries(name)(spark, sfDir)
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      println(s"[spillcheck] $name done")
-    }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql.filter(kv => Slice.contains(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    val failed = try graft.Verify.dump(spark, sfDir, outDir, Slice)
+      finally spark.stop()
     println(f"[spillcheck] memoryBytesSpilled=$spilledMem%d " +
       f"diskBytesSpilled=$spilledDisk%d")
+    assert(failed.isEmpty, s"queries failed under forced spill: ${failed.mkString(", ")}")
     assert(spilledMem > 0 || spilledDisk > 0,
       "force-spill knobs produced zero spills — the slice proved nothing")
   }

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.sources.TxLog
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 
 /** Measures the TxLog's marker-side costs at reader-relevant scales —
   * the numbers behind the SCALE.md claim that a manifest log of
@@ -34,10 +33,7 @@ object TxLogBench {
   def main(args: Array[String]): Unit = {
     val counts = if (args.nonEmpty) args.map(_.toInt).toSeq
                  else Seq(1000, 10000, 100000)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val fsConf = spark.sparkContext.hadoopConfiguration
     for (n <- counts) {
