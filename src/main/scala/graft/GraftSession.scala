@@ -36,5 +36,12 @@ object GraftSession {
       // Tables.eventTs dispatches on whichever shape is observed
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      // Janino compilations are cached per generated-code shape; the
+      // default of 100 entries is smaller than one curation pass's
+      // working set, so a repeated q92 + q19 pass at sf0.01 recompiled
+      // ~55 classes every time and 40-doc curationStep batches 75-114.
+      // 200 is the smallest size measured to hold both (0, and 12-29
+      // per batch; 300-1000 gave the same counts)
+      .config("spark.sql.codegen.cache.maxEntries", "200")
   }
 }

@@ -55,7 +55,7 @@ object Components {
     require(maxIter > 0, s"maxIter must be > 0, got $maxIter")
     val s = edges.sparkSession
     val canonEdges = canon(edges.select(col(srcCol).as("u"), col(dstCol).as("v")))
-    // Bounded driver path, [[closeRootGraph]]'s established contract:
+    // Bounded driver path, [[contractBatch]]'s established contract:
     // when the canonical edge set fits `maxDriverCloseEdges`, ONE
     // collect + an in-memory union-find replaces the distributed
     // loop's ~3 jobs per round (two star shuffles + a lineage cut +
@@ -125,10 +125,10 @@ object Components {
     else df.localCheckpoint()
 
   /** Collected canonical edges → union-find → (node, minLabel) rows
-    * for every node whose label is not itself.  Shared by
-    * [[connectedComponents]]'s bounded driver path and
-    * [[closeRootGraph]]; larger-under-smaller linking keeps every
-    * root the component minimum (the label contract). */
+    * for every node whose label is not itself.  Shared by the bounded
+    * driver paths of [[connectedComponents]] and [[contractBatch]];
+    * larger-under-smaller linking keeps every root the component
+    * minimum (the label contract). */
   private def unionFindMoved(rows: Array[org.apache.spark.sql.Row])
       : java.util.ArrayList[org.apache.spark.sql.Row] = {
     val parent = new java.util.HashMap[Any, Any]()
@@ -288,21 +288,78 @@ object Components {
     * (`changed` = old-root → new-root for roots whose label moved,
     * `newNodes` = (n, c=n) first assignments for unseen endpoints).
     *
-    * The ONE join that touches the full prior table builds its hash
-    * from the broadcast ENDPOINT set and streams `pri` past it (inner
-    * join, probe side big) — at a 10^9-row assignment table the
-    * alternative orientations are fatal: a left join FROM endpoints
-    * can only build the prior side (broadcast the whole table), and
-    * letting Catalyst pick at these sizes means a sort-merge join
-    * that shuffles it.  The O(|batch|)-sized hit set is
-    * localCheckpoint'd so the (already eager) downstream closure and
-    * the caller's lazy tail don't re-scan the prior to re-derive
-    * it. */
+    * Bounded driver path: when the batch's canonical edge set fits
+    * `maxDriverCloseEdges`, the whole contraction runs on the driver —
+    * one collect of the edges, one collect of their endpoints' prior
+    * roots (the prior table streams past a broadcast of the endpoint
+    * set), then union-find over the contracted root graph; both
+    * outputs come back as local frames.  At near-dup-pair edge counts this
+    * replaces the distributed form's lineage cuts, contraction joins
+    * and closure rounds — pure fixed job overhead on a micro-batch.
+    * This is the established bounded-driver-reduce contract (k-means
+    * centroid collect, takeByBudget histogram): the collected set is
+    * operator-bounded, not data-bounded.  Linking larger root under
+    * smaller makes each tree's root the component MINIMUM — the label
+    * the distributed path emits (ComponentsSpec pins the two paths
+    * equal).  Batches past the ceiling — backfill-sized — take
+    * [[contractDistributed]]; `maxDriverCloseEdges = 0` forces it. */
   private def contractBatch(pri: DataFrame, newEdges: DataFrame,
       srcCol: String, dstCol: String, maxIter: Int,
       checkpointDir: Option[String],
       maxDriverCloseEdges: Int): (DataFrame, DataFrame) = {
     val e = canon(newEdges.select(col(srcCol).as("u"), col(dstCol).as("v")))
+    if (maxDriverCloseEdges > 0) {
+      val probe = e.limit(maxDriverCloseEdges + 1).collect()
+      if (probe.length <= maxDriverCloseEdges)
+        return contractOnDriver(pri, probe, e.schema.head.dataType)
+    }
+    contractDistributed(pri, e, maxIter, checkpointDir)
+  }
+
+  /** [[contractBatch]]'s driver path over the collected canonical
+    * `edges`.  Prior roots are cast to the edges' id type so the
+    * lookups compare like values. */
+  private def contractOnDriver(pri: DataFrame,
+      edges: Array[org.apache.spark.sql.Row],
+      idType: org.apache.spark.sql.types.DataType): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val s = pri.sparkSession
+    def schema(names: String*) =
+      StructType(names.map(StructField(_, idType)))
+    // one partition: at the default split a driver-built frame lands
+    // up to defaultParallelism tiny files in every log write it reaches
+    def local(rows: Iterable[Row], names: String*) =
+      s.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), schema(names: _*))
+        .coalesce(1)
+    val endpoints = edges.flatMap(r => Seq(r.get(0), r.get(1))).distinct
+    // endpoints present in prior, with their roots: pri streams
+    val rootOf: Map[Any, Any] = pri
+      .join(broadcast(local(endpoints.map(Row(_)), "n")), Seq("n"), "inner")
+      .select(col("n").cast(idType), col("c").cast(idType))
+      .collect().map(r => r.get(0) -> r.get(1)).toMap
+    def root(x: Any): Any = rootOf.getOrElse(x, x)
+    // contracted root graph; same-root edges drop
+    val rootEdges = edges.map(r => Row(root(r.get(0)), root(r.get(1))))
+      .filter(r => r.get(0) != r.get(1))
+    val changed = s.createDataFrame(unionFindMoved(rootEdges), schema("c", "c2"))
+    val newNodes = local(endpoints.filterNot(rootOf.contains).map(n => Row(n, n)), "n", "c")
+    (changed, newNodes)
+  }
+
+  /** [[contractBatch]] past the driver ceiling.  The ONE join that
+    * touches the full prior table builds its hash from the broadcast
+    * ENDPOINT set and streams `pri` past it (inner join, probe side
+    * big) — at a 10^9-row assignment table the alternative
+    * orientations are fatal: a left join FROM endpoints can only build
+    * the prior side (broadcast the whole table), and letting Catalyst
+    * pick at these sizes means a sort-merge join that shuffles it.
+    * The O(|batch|)-sized hit set is localCheckpoint'd so the closure
+    * and the caller's lazy tail don't re-scan the prior to re-derive
+    * it.  The contracted root graph closes with the distributed
+    * large-star/small-star loop. */
+  private def contractDistributed(pri: DataFrame, e: DataFrame, maxIter: Int,
+      checkpointDir: Option[String]): (DataFrame, DataFrame) = {
     val endpoints = e.select(col("u").as("n"))
       .union(e.select(col("v").as("n"))).distinct()
     // endpoints present in prior, with their roots: pri streams
@@ -319,75 +376,22 @@ object Components {
       .join(endpointRoot.select(col("n").as("v"), col("r").as("rv")), Seq("v"))
       .where(col("ru") =!= col("rv"))
       .select("ru", "rv")
-    // closure over the contracted root graph: O(|batch|) edges
-    val changed = closeRootGraph(rootEdges, endpointRoot, maxIter,
-      checkpointDir, maxDriverCloseEdges)
+    // closure over the contracted root graph: O(|batch|) edges; the
+    // driver ceiling was already probed (or disabled) — don't re-probe
+    val changed = connectedComponents(rootEdges, "ru", "rv",
+        endpointRoot.select(col("r").as("n")).distinct(), "n",
+        maxIter, checkpointDir, maxDriverCloseEdges = 0)
+      .where(col("n") =!= col("component"))
+      .select(col("n").as("c"), col("component").as("c2"))
     (changed, newNodes)
   }
 
-  /** Default ceiling for [[closeRootGraph]]'s driver path: 10^6
-    * edges ≈ tens of MB of boxed ids on the driver — the same order
-    * as the broadcast the remap already requires, so the driver path
-    * never admits a graph the downstream broadcast couldn't. */
+  /** Default ceiling for [[contractBatch]]'s and
+    * [[connectedComponents]]'s driver paths: 10^6 edges ≈ tens of MB
+    * of boxed ids on the driver — the same order as the broadcast the
+    * remap already requires, so the driver path never admits a graph
+    * the downstream broadcast couldn't. */
   val DefaultMaxDriverCloseEdges: Int = 1000000
-
-  /** Close the contracted ROOT graph and return `changed` =
-    * (c = old root, c2 = new min label) for roots whose label moved.
-    *
-    * The root graph is O(|batch|) edges BY CONSTRUCTION (contraction
-    * collapses each prior component to one node), and the caller
-    * already broadcasts the changed-roots output — so when the edge
-    * set fits `maxDriverCloseEdges`, the closure runs as a driver
-    * UNION-FIND over the collected edges: one collect job replaces
-    * the distributed loop's ~10 jobs per batch (two shuffles + a
-    * lineage cut + a convergence probe per round), the dominant
-    * fixed cost of a small micro-batch (measured: the assign layer
-    * drops 2.9 → 1.2 s/batch at CurationBench's toy scale).  This is
-    * the established bounded-driver-reduce contract (k-means
-    * centroid collect, takeByBudget histogram): the collected set is
-    * operator-bounded, not data-bounded.  Linking larger root under
-    * smaller makes each tree's root the component MINIMUM — the same
-    * label the distributed path emits (ComponentsSpec pins the two
-    * paths equal).  Graphs past the ceiling — backfill-sized batches
-    * — take the distributed large-star/small-star path unchanged;
-    * `maxDriverCloseEdges = 0` forces it (specs use this to keep the
-    * distributed path covered). */
-  private def closeRootGraph(rootEdges: DataFrame, endpointRoot: DataFrame,
-      maxIter: Int, checkpointDir: Option[String],
-      maxDriverCloseEdges: Int): DataFrame = {
-    val s = rootEdges.sparkSession
-    val idType = rootEdges.schema.head.dataType
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("c", idType),
-      org.apache.spark.sql.types.StructField("c2", idType)))
-    // cut lineage BEFORE the size probe: the probe's collect executes
-    // the contraction joins, and without this a past-ceiling graph —
-    // exactly the backfill case the fallback exists for — would pay
-    // those joins again when the distributed closure recomputes
-    // rootEdges from scratch.  One materialization either way; the
-    // blocks are dropped with the reference (ContextCleaner), the
-    // same lifecycle as the per-round cuts above.
-    val edges =
-      if (maxDriverCloseEdges > 0) rootEdges.localCheckpoint()
-      else rootEdges
-    val probe =
-      if (maxDriverCloseEdges > 0)
-        edges.limit(maxDriverCloseEdges + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (maxDriverCloseEdges > 0 && probe.length <= maxDriverCloseEdges) {
-      // larger root links under smaller ⇒ every root is its
-      // component's min, the label contract
-      s.createDataFrame(unionFindMoved(probe), outSchema)
-    } else {
-      val rootNodes = endpointRoot.select(col("r").as("n")).distinct()
-      // the ceiling was already probed here (or disabled) — force the
-      // distributed loop, don't re-probe
-      connectedComponents(edges, "ru", "rv", rootNodes, "n",
-        maxIter, checkpointDir, maxDriverCloseEdges = 0)
-        .where(col("n") =!= col("component"))
-        .select(col("n").as("c"), col("component").as("c2"))
-    }
-  }
 
   /** The DELTA form of [[incrementalComponents]]: same contraction,
     * but the output holds ONLY rows whose assignment differs from

@@ -287,9 +287,14 @@ object Dedup {
     * 100 TB per arriving batch ([[lshPairs]]'s shape) is the thing to
     * avoid:
     *
-    *  - `<name>_bands`   (id, band_id, bh), bucketed by `bh`: the
-    *    incremental band join probes this pre-hashed side WITHOUT
-    *    shuffling it — only the (small) new batch moves;
+    *  - `<name>_bands`   (id, band_id, bh), bucketed by the band
+    *    join's full key (`band_id`, `bh`): the incremental band join
+    *    probes this pre-hashed side WITHOUT shuffling it — only the
+    *    (small) new batch moves.  (A table written before the two-key
+    *    bucketing, on `bh` alone, does not satisfy the join's
+    *    distribution, so its scan re-shuffles per probe until
+    *    [[writeLshIndex]] rebuilds it; appends and compactions follow
+    *    whatever spec the catalog holds.);
     *  - `<name>_shingles` (id, sh), bucketed by `id`: candidate-pair
     *    verification fetches stored shingle sets by id.
     *
@@ -342,32 +347,52 @@ object Dedup {
       batchId: Long, initial: Boolean): Unit = {
     val shingleTbl = shinglePrep(df, idCol, textCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      writeIndexTable(shingleTbl.withColumn("batch_id", lit(batchId)),
-        s"${name}_shingles", buckets, "id", initial)
-      writeIndexTable(bandedOf(shingleTbl, bands).withColumn("batch_id", lit(batchId)),
-        s"${name}_bands", buckets, "bh", initial)
-    } finally shingleTbl.unpersist()
+    try landIndexTables(shingleTbl, bandedOf(shingleTbl, bands), name, buckets,
+      batchId, initial)
+    finally shingleTbl.unpersist()
   }
 
+  /** Land one batch's prepared shingle and band rows: `_shingles`
+    * first, `_bands` second (the order the replay guards key off). */
+  private def landIndexTables(shingleTbl: DataFrame, banded: DataFrame,
+      name: String, buckets: Int, batchId: Long, initial: Boolean): Unit = {
+    writeIndexTable(shingleTbl.withColumn("batch_id", lit(batchId)),
+      s"${name}_shingles", buckets, Seq("id"), initial)
+    writeIndexTable(banded.withColumn("batch_id", lit(batchId)),
+      s"${name}_bands", buckets, Seq("band_id", "bh"), initial)
+  }
+
+  /** A batch's shingle table and its band rows, each persisted: the
+    * probe and the index append both read them, so an ingest shingles
+    * and bands its batch once.  The caller unpersists both. */
+  private def prepBatch(batch: DataFrame, idCol: String, textCol: String,
+      n: Int, bands: Int): (DataFrame, DataFrame) = {
+    val sh = shinglePrep(batch, idCol, textCol, n)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (sh, bandedOf(sh, bands)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  }
+
+  /** `initial` creates `table` bucketed on `bucketCols`; an append
+    * follows the bucket spec the catalog holds and repartitions on it
+    * first, so each write task holds exactly one bucket and the batch
+    * lands one file per bucket (not one per task × bucket) — the idiom
+    * [[compactLshIndex]] uses. */
   private def writeIndexTable(df: DataFrame, table: String, buckets: Int,
-      bucketCol: String, initial: Boolean): Unit = {
+      bucketCols: Seq[String], initial: Boolean): Unit = {
     val spark = df.sparkSession
     if (initial) {
       graft.sources.Tables.dropWithLocation(spark, table)
-      df.write.partitionBy("batch_id").bucketBy(buckets, bucketCol)
+      df.write.partitionBy("batch_id")
+        .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
         .format("parquet").saveAsTable(table)
     } else {
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "dynamic")
+      val spec = bucketSpecOf(spark, table)
       // Overwrite + dynamic mode replaces ONLY the partitions present
       // in df — i.e. this batch's — leaving every other batch intact
-      try df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).insertInto(table)
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
+      writeBatchPartitionInto(
+        df.repartition(spec.numBuckets, spec.bucketColumnNames.map(col).toIndexedSeq: _*),
+        table)
     }
   }
 
@@ -380,27 +405,51 @@ object Dedup {
     * table was stored or recomputed (q72's oracle checks exactly
     * that).
     *
-    * Scale shape: new bands probe the bh-bucketed index table (index
-    * side does NOT shuffle); candidates are deduped ids-only before
-    * any shingle fetch; the stored shingle table is semi-join-pruned
-    * to candidate ids BEFORE the fetch joins (broadcast ids while the
-    * materialized id cache stays under `maxBroadcastBytes` — a BYTE
-    * bound, so wide string ids are safe — shuffle semi-join above,
-    * with a logged note), so the per-batch shuffle is
-    * O(batch + candidates) — the stored shingle arrays never
-    * reshuffle wholesale.  Batch ids must be disjoint from indexed
-    * ids.  NOTE: sizing the guard materializes the candidate cache,
-    * so calling this runs the band-probe jobs eagerly (the cache is
-    * what the verification joins then reuse — consumed results pay
-    * nothing extra; explain-only callers pay the probe). */
+    * Scale shape: new bands probe the index's band table, bucketed on
+    * the join key (`band_id`, `bh`), so the index side does NOT
+    * shuffle (PlanShapeSpec pins that no exchange sits over its
+    * scan); candidates are deduped ids-only before any shingle fetch;
+    * the stored shingle table is semi-join-pruned to candidate ids
+    * BEFORE the fetch joins (broadcast ids while they fit
+    * `maxBroadcastBytes` — a BYTE bound, so wide string ids are safe —
+    * shuffle semi-join above, with a logged note), so the per-batch
+    * shuffle is O(batch + candidates) — the stored shingle arrays
+    * never reshuffle wholesale.  Batch ids must be disjoint from
+    * indexed ids.  NOTE: sizing the guard materializes the candidate
+    * cache, so calling this runs the band-probe jobs eagerly (the
+    * cache is what the verification joins then reuse — consumed
+    * results pay nothing extra; explain-only callers pay the probe). */
   def lshPairsAgainstIndex(newBatch: DataFrame, idCol: String, textCol: String,
       name: String, n: Int = 3, bands: Int = 8,
-      minJaccard: Double = 0.0, maxBroadcastBytes: Long = 256L << 20): DataFrame = {
-    val spark = newBatch.sparkSession
-    val newSh = shinglePrep(newBatch, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val newBands = bandedOf(newSh, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      minJaccard: Double = 0.0,
+      maxBroadcastBytes: Long = DefaultMaxBroadcastBytes): DataFrame = {
+    val (newSh, newBands) = prepBatch(newBatch, idCol, textCol, n, bands)
+    val (pairs, handles) = probeIndex(newSh, newBands, name, minJaccard,
+      maxBroadcastBytes)
+    registerCleanup(pairs, Seq(newSh, newBands) ++ handles: _*)
+  }
+
+  /** Default byte budget for the probe's broadcast candidate ids. */
+  private val DefaultMaxBroadcastBytes: Long = 256L << 20
+
+  /** [[lshPairsAgainstIndex]] over a prepared batch ([[prepBatch]]).
+    * Returns the pairs and the caches behind them (the candidate
+    * pairs, and the id cache when the guard had to size one).
+    *
+    * The candidate pairs are materialized ONCE (persist): the id
+    * prune and both verification joins read them.  The prune's guard
+    * needs the candidate ids' size before planning the broadcast.
+    * For fixed-width ids the byte budget is an exact row bound
+    * (UnsafeRow: 8-byte null bitset + one 8-byte slot per id), so the
+    * ids are collected straight off the candidate cache — the same
+    * job materializes it — under that bound, further capped at
+    * [[Components.DefaultMaxDriverCloseEdges]] pairs since the driver
+    * holds them, and broadcast as a local frame.  Past either cap, and for variable-width ids, the ids are
+    * persisted and counted so the cached-size statistic is real, and
+    * that size decides broadcast vs shuffle semi-join. */
+  private def probeIndex(newSh: DataFrame, newBands: DataFrame, name: String,
+      minJaccard: Double, maxBroadcastBytes: Long): (DataFrame, Seq[DataFrame]) = {
+    val spark = newSh.sparkSession
     // purge mask: between a [[graft.ext.Purge.purgeLshIndex]] and the
     // erasing compaction the index still holds purged docs'
     // signatures — a stored band of a purged doc must not pair with
@@ -413,8 +462,8 @@ object Dedup {
         df.join(broadcast(p), Seq("id"), "left_anti"))
     val idxBands = mask(spark.table(s"${name}_bands"))
     val idxSh = mask(spark.table(s"${name}_shingles"))
-    // batch↔index candidates: the stored side is bucketed by bh, so
-    // only the new bands shuffle into the probe
+    // batch↔index candidates: the stored side is bucketed on the join
+    // key, so only the new bands shuffle into the probe
     val vsIndex = newBands.select(col("band_id"), col("bh"), col("id").as("id_x"))
       .join(idxBands.select(col("band_id"), col("bh"), col("id").as("id_y")),
         Seq("band_id", "bh"))
@@ -436,20 +485,40 @@ object Dedup {
     // a pathological batch falls back to a shuffle semi-join.
     val candIds = cands.select(col("id_a").as("id"))
       .unionByName(cands.select(col("id_b").as("id"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    candIds.count() // materialize so the cached-size statistic is real
-    // byte-based guard: broadcast limits and driver memory are byte
-    // budgets, and ids can be wide strings — a row-count bound would
-    // pass 4M×200-byte URLs straight into a driver OOM
-    val idBytes = candIds.queryExecution.optimizedPlan.stats.sizeInBytes
-    val idsSide =
-      if (idBytes <= maxBroadcastBytes) broadcast(candIds)
+    val idType = cands.schema("id_a").dataType
+    val collected =
+      if (!org.apache.spark.sql.catalyst.expressions.UnsafeRow.isFixedLength(idType)) None
       else {
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"lshPairsAgainstIndex: candidate id cache is $idBytes bytes, over " +
-            s"maxBroadcastBytes=$maxBroadcastBytes — shuffle semi-join fallback")
-        candIds
+        val idRowBytes = 16L
+        val cap = math.min(maxBroadcastBytes / idRowBytes,
+          Components.DefaultMaxDriverCloseEdges.toLong).toInt
+        val rows = cands.limit(cap + 1).collect()
+        val ids = rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1))).toSeq.distinct
+        if (rows.length <= cap && ids.size * idRowBytes <= maxBroadcastBytes) Some(ids)
+        else None
       }
+    val (idsSide, handles) = collected match {
+      case Some(ids) =>
+        (broadcast(spark.createDataFrame(
+          java.util.Arrays.asList(ids.map(org.apache.spark.sql.Row(_)): _*),
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("id", idType))))), Seq(cands))
+      case None =>
+        val cached = candIds
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        cached.count() // materialize so the cached-size statistic is real
+        // byte-based guard: broadcast limits and driver memory are byte
+        // budgets, and ids can be wide strings — a row-count bound would
+        // pass 4M×200-byte URLs straight into a driver OOM
+        val idBytes = cached.queryExecution.optimizedPlan.stats.sizeInBytes
+        if (idBytes <= maxBroadcastBytes) (broadcast(cached), Seq(cands, cached))
+        else {
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"lshPairsAgainstIndex: candidate id cache is $idBytes bytes, over " +
+              s"maxBroadcastBytes=$maxBroadcastBytes — shuffle semi-join fallback")
+          (cached, Seq(cands, cached))
+        }
+    }
     // no dedup needed on the stored slice: appendToLshIndex lands each
     // batch as its own overwritten partition, so a crash-replay can
     // never leave a document's shingles in the index twice
@@ -458,13 +527,11 @@ object Dedup {
     val inter = sortedIntersectCount(col("sh_a"), col("sh_b")).cast("double")
     val jac = inter /
       ((size(col("sh_a")) + size(col("sh_b"))).cast("double") - inter)
-    registerCleanup(
-      cands
-        .join(allSh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-        .join(allSh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-        .select(col("id_a"), col("id_b"), jac.as("jaccard"))
-        .where(col("jaccard") >= minJaccard),
-      newSh, newBands, cands, candIds)
+    (cands
+      .join(allSh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+      .join(allSh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"), jac.as("jaccard"))
+      .where(col("jaccard") >= minJaccard), handles)
   }
 
   /** Land `df` as `table`'s `batch_id=batchId` partition — creating
@@ -536,33 +603,45 @@ object Dedup {
       textCol: String, name: String, pairsTable: String, n: Int = 3,
       bands: Int = 8, buckets: Int = 16, minJaccard: Double = 0.0): Boolean = {
     val spark = batch.sparkSession
-    val seen = spark.catalog.tableExists(s"${name}_batches") &&
-      spark.table(s"${name}_batches")
-        .where(col("batch_id") === batchId).limit(1).count() > 0
-    if (seen) false
+    if (batchMarked(spark, name, batchId)) false
     else {
-      val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val (sh, bd) = prepBatch(batch, idCol, textCol, n, bands)
       try {
         // Re-probe guard: keyed off _shingles, the FIRST table the
         // append writes — its presence means the probe+pairs stage
         // completed AND the index may hold the batch's own signatures
-        if (!indexHasShingles(spark, name, batchId)) {
-          val pairs = lshPairsAgainstIndex(b, idCol, textCol, name, n, bands, minJaccard)
-          writeBatchPartition(pairs, pairsTable, batchId)
-          unpersistInputsOf(pairs)
+        val probed = !indexHasShingles(spark, name, batchId)
+        if (probed) {
+          val (pairs, handles) = probeIndex(sh, bd, name, minJaccard, DefaultMaxBroadcastBytes)
+          try writeBatchPartition(pairs, pairsTable, batchId)
+          finally handles.foreach(_.unpersist())
         }
         // Re-append guard: keyed off _bands, the LAST table the append
         // writes — absent means the append is owed (in full or from a
-        // half-append crash); the re-run overwrites both partitions
-        if (!indexHasBatch(spark, name, batchId))
-          appendToLshIndex(b, batchId, idCol, textCol, name, n, bands, buckets)
-        spark.range(1).select(lit(batchId).as("batch_id")).write
-          .mode(org.apache.spark.sql.SaveMode.Append)
-          .format("parquet").saveAsTable(s"${name}_batches")
+        // half-append crash); the re-run overwrites both partitions.
+        // After a probe it is owed by construction (no _shingles
+        // partition, so no _bands one either)
+        if (probed || !indexHasBatch(spark, name, batchId))
+          landIndexTables(sh, bd, name, buckets, batchId, initial = false)
+        markBatch(spark, name, batchId)
         true
-      } finally b.unpersist()
+      } finally { bd.unpersist(); sh.unpersist() }
     }
   }
+
+  /** Has `<name>_batches` marked `batchId`?  One scan of the marker
+    * table (a plain collect: each id is marked at most once, and a
+    * limit would rescan its one-file-per-batch partitions in rounds). */
+  private def batchMarked(spark: SparkSession, name: String, batchId: Long): Boolean =
+    spark.catalog.tableExists(s"${name}_batches") &&
+      spark.table(s"${name}_batches").where(col("batch_id") === batchId)
+        .select("batch_id").collect().nonEmpty
+
+  /** Append `batchId` to `<name>_batches` — the ingest's last step. */
+  private def markBatch(spark: SparkSession, name: String, batchId: Long): Unit =
+    spark.range(1).select(lit(batchId).as("batch_id")).write
+      .mode(org.apache.spark.sql.SaveMode.Append)
+      .format("parquet").saveAsTable(s"${name}_batches")
 
   /** Re-probe guard: has `batchId`'s SHINGLE partition landed?
     * `_shingles` is the FIRST table [[writeIndexTables]] writes, so
@@ -586,10 +665,11 @@ object Dedup {
   private def indexHasBatch(spark: SparkSession, name: String, batchId: Long): Boolean =
     partitionLanded(spark, s"${name}_bands", batchId)
 
-  /** One partition-pruned existence probe. */
+  /** One partition-pruned existence probe (a take of one row: an
+    * absent partition has no files, so no job runs at all). */
   private def partitionLanded(spark: SparkSession, table: String, batchId: Long): Boolean =
     spark.catalog.tableExists(table) &&
-      spark.table(table).where(col("batch_id") === batchId).limit(1).count() > 0
+      spark.table(table).where(col("batch_id") === batchId).limit(1).collect().nonEmpty
 
   /** EXACTLY-ONCE twin of [[ingestBatchIntoIndex]]: the user-facing
     * pairs output goes through a [[graft.sources.TxLog]] manifest
@@ -619,33 +699,33 @@ object Dedup {
       textCol: String, name: String, pairsDir: String, n: Int = 3,
       bands: Int = 8, buckets: Int = 16, minJaccard: Double = 0.0): Boolean = {
     val spark = batch.sparkSession
-    val seen = spark.catalog.tableExists(s"${name}_batches") &&
-      spark.table(s"${name}_batches")
-        .where(col("batch_id") === batchId).limit(1).count() > 0
-    if (seen) false
+    if (batchMarked(spark, name, batchId)) false
     else {
-      val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // shingled and banded once: the probe and the append share them
+      val (sh, bd) = prepBatch(batch, idCol, textCol, n, bands)
       try {
-        if (!graft.sources.TxLog.isCommitted(spark, pairsDir, batchId)) {
-          val pairs = lshPairsAgainstIndex(b, idCol, textCol, name, n, bands, minJaccard)
-          val committed = graft.sources.TxLog.commitBatch(pairs, pairsDir, batchId)
+        val probed = !graft.sources.TxLog.isCommitted(spark, pairsDir, batchId)
+        if (probed) {
+          val (pairs, handles) = probeIndex(sh, bd, name, minJaccard, DefaultMaxBroadcastBytes)
+          val committed =
+            try graft.sources.TxLog.commitBatch(pairs, pairsDir, batchId)
+            finally handles.foreach(_.unpersist())
           // commitBatch returns false ONLY for a verified already-
           // committed batch (any real I/O failure propagates); re-check
           // so the index append + batch marker can never record a batch
           // whose pairs did not land
           require(committed || graft.sources.TxLog.isCommitted(spark, pairsDir, batchId),
             s"TxLog batch $batchId reported already-committed but no marker is visible")
-          unpersistInputsOf(pairs)
         }
         // skip the (idempotent) re-append when the partition already
-        // landed — a replay past this stage only owes the marker
-        if (!indexHasBatch(spark, name, batchId))
-          appendToLshIndex(b, batchId, idCol, textCol, name, n, bands, buckets)
-        spark.range(1).select(lit(batchId).as("batch_id")).write
-          .mode(org.apache.spark.sql.SaveMode.Append)
-          .format("parquet").saveAsTable(s"${name}_batches")
+        // landed — a replay past this stage only owes the marker.  The
+        // append follows the pairs commit, so a batch whose pairs were
+        // uncommitted on entry owes it without asking
+        if (probed || !indexHasBatch(spark, name, batchId))
+          landIndexTables(sh, bd, name, buckets, batchId, initial = false)
+        markBatch(spark, name, batchId)
         true
-      } finally b.unpersist()
+      } finally { bd.unpersist(); sh.unpersist() }
     }
   }
 
@@ -741,10 +821,8 @@ object Dedup {
       val system = spark.table(tbl).select("batch_id").distinct()
         .collect().map(_.getLong(0)).filter(_ < 0L)
       val foldable = (committed ++ system + compactedBatchId).toSeq
-      val spec = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)).bucketSpec
-        .getOrElse(sys.error(s"$tbl has no bucket spec — not an LSH index table"))
-      val bucketCol = spec.bucketColumnNames.head
+      val spec = bucketSpecOf(spark, tbl)
+      val bucketCols = spec.bucketColumnNames
       val live = spark.table(tbl)
       // repartition on the bucket column with the bucket count: bucket
       // ids are the same murmur3-pmod hash, so each task holds exactly
@@ -761,9 +839,9 @@ object Dedup {
       val stage = s"${tbl}__cstage"
       graft.sources.Tables.dropWithLocation(spark, stage)
       folded.unionByName(rest)
-        .repartition(spec.numBuckets, col(bucketCol))
+        .repartition(spec.numBuckets, bucketCols.map(col).toIndexedSeq: _*)
         .write.partitionBy("batch_id")
-        .bucketBy(spec.numBuckets, bucketCol)
+        .bucketBy(spec.numBuckets, bucketCols.head, bucketCols.tail.toIndexedSeq: _*)
         .format("parquet").saveAsTable(stage)
       graft.sources.Tables.dropWithLocation(spark, tbl)
       renameWithPartitions(spark, stage, tbl)
@@ -964,11 +1042,12 @@ object Dedup {
         // checkpointed into 13 partitions), and a generation written
         // with the scan's partitioning lands ~tasks×buckets files —
         // the exact growth this fold exists to remove
+        val spec = bucketSpecOf(spark, tbl)
         val rows = spark.table(tbl)
           .where(col("batch_id").isin(folded: _*))
           .withColumn("batch_id", lit(gen))
           .localCheckpoint()
-          .repartition(bucketCountOf(spark, tbl), col(bucketColOf(spark, tbl)))
+          .repartition(spec.numBuckets, spec.bucketColumnNames.map(col).toIndexedSeq: _*)
         writeBatchPartitionInto(rows, tbl)
         crash(s"$tbl:after-gen")
         publishFoldMarker(spark, tbl, "_minor_fold_done", gen, folded)
@@ -1012,12 +1091,6 @@ object Dedup {
     spark.sessionState.catalog.getTableMetadata(
         org.apache.spark.sql.catalyst.TableIdentifier(tbl)).bucketSpec
       .getOrElse(sys.error(s"$tbl has no bucket spec — not an LSH index table"))
-
-  private def bucketCountOf(spark: SparkSession, tbl: String): Int =
-    bucketSpecOf(spark, tbl).numBuckets
-
-  private def bucketColOf(spark: SparkSession, tbl: String): String =
-    bucketSpecOf(spark, tbl).bucketColumnNames.head
 
   /** Dynamic-overwrite `rows` (one batch_id partition) into `tbl` —
     * the same idempotent replace [[writeIndexTable]] uses for appends. */

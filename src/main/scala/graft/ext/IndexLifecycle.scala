@@ -119,9 +119,10 @@ object IndexLifecycle {
     val stage = s"${tbl}__cstage"
     graft.sources.Tables.dropWithLocation(spark, stage)
     val shaped = spec.fold(staged.coalesce(1))(sp =>
-      staged.repartition(sp.numBuckets, col(sp.bucketColumnNames.head)))
+      staged.repartition(sp.numBuckets, sp.bucketColumnNames.map(col).toIndexedSeq: _*))
     val w = shaped.write.partitionBy("batch_id").format("parquet")
-    spec.fold(w)(sp => w.bucketBy(sp.numBuckets, sp.bucketColumnNames.head))
+    spec.fold(w)(sp => w.bucketBy(sp.numBuckets, sp.bucketColumnNames.head,
+      sp.bucketColumnNames.tail.toIndexedSeq: _*))
       .saveAsTable(stage)
     graft.sources.Tables.dropWithLocation(spark, tbl)
     Dedup.renameWithPartitions(spark, stage, tbl)

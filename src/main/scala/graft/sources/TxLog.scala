@@ -12,33 +12,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Layout under `dir`:
   * {{{
   *   _staged/<marker>-<uuid>/    parquet files for one attempt
+  *   _staged/<marker>-<uuid>/_schema  the attempt's schema (JSON)
   *   _commits/<batchId>          writer marker; CONTENT = staged dir name
   *   _commits/c<maxFoldedId>     compaction marker (same content shape)
-  *   _commits/.tmp/<uuid>        marker bodies awaiting the publish rename
+  *   _commits/.tmp/<uuid>        marker bodies awaiting the publish
   * }}}
   *
   * Protocol per batch:
   *  1. write the batch's rows to a fresh `_staged/<batchId>-<uuid>/`
-  *     (a crashed attempt leaves an orphan dir no marker references);
+  *     (a crashed attempt leaves an orphan dir no marker references),
+  *     then the `_schema` sidecar: staged dirs are write-once, so the
+  *     schema recorded here is the one every later read sees, and
+  *     readers take it instead of running a parquet schema-inference
+  *     job per read (a dir without one — written before the sidecar
+  *     existed — falls back to inference);
   *  2. write the marker BODY (the staged dir name) to
   *     `_commits/.tmp/<uuid>` and close it — content is durable before
   *     anything references it;
-  *  3. publish with ONE no-overwrite rename of the tmp file to
-  *     `_commits/<batchId>` (`FileContext.rename(…, Rename.NONE)` —
-  *     atomic on HDFS-likes; the pattern Spark's own streaming
-  *     checkpoint manager uses for its commit log).
+  *  3. publish it at `_commits/<batchId>` with ONE atomic no-clobber
+  *     operation: a hard link on the local filesystem (`link(2)` fails
+  *     if the name exists), `FileContext.rename(…, Rename.NONE)`
+  *     elsewhere (atomic on HDFS-likes; the pattern Spark's own
+  *     streaming checkpoint manager uses for its commit log).  Hadoop's
+  *     local `Rename.NONE` is an exists-check followed by an
+  *     overwriting rename, so it is not used there.
   *
   * A crash at any point leaves either no marker (replay re-stages and
   * commits) or a complete marker (replay is a no-op) — never a
-  * half-written marker, because the rename is the only operation that
+  * half-written marker, because the publish is the only operation that
   * makes a marker visible.  Two concurrent attempts race on the
-  * no-overwrite rename; one wins, the loser's staged dir is an orphan
-  * for [[vacuum]].  (On a POSIX local fs the exists-check inside the
-  * rename is check-then-act, so two attempts landing within the same
-  * microsecond can both report success — the marker then names ONE of
-  * the two identical staged dirs, so reads stay exactly-once; HDFS
-  * renames are atomic and report the race exactly.)  No reader ever
-  * needs a defensive DISTINCT.
+  * no-clobber publish; exactly one wins, the loser's staged dir is an
+  * orphan for [[vacuum]].  No reader ever needs a defensive DISTINCT.
   *
   * Compaction markers live in their own name shape (`c<n>`, n = the
   * largest writer id folded in) so they can NEVER collide with a
@@ -133,19 +137,19 @@ object TxLog {
 
   /** Read a small metadata file (marker / lease body) as UTF-8.
     *
-    * On a ChecksumFileSystem (`file://`), a lost marker-publish race
-    * can TEAR the `.crc` SIDECAR: the local checksum layer renames
-    * the sidecar before the data rename, so the loser's crc lands
-    * (plain overwrite — sidecar renames don't honor no-overwrite)
-    * and then its data rename fails on the existing marker — leaving
-    * the winner's body paired with the loser's crc.  The body itself
-    * is intact and authoritative (markers publish by atomic
-    * single-file rename), so a ChecksumException here retries against
-    * the raw filesystem and best-effort deletes the torn sidecar
-    * (absence of a crc just means "unverified" locally; the marker is
-    * immutable after publish).  On real stores (HDFS/S3A) there is no
-    * client-side sidecar — a ChecksumException there is genuine
-    * corruption and propagates. */
+    * On a ChecksumFileSystem (`file://`), a marker published by the
+    * older rename-based protocol can carry a TORN `.crc` SIDECAR: the
+    * local checksum layer renamed the sidecar before the data rename,
+    * so a race loser's crc landed (plain overwrite) and then its data
+    * rename failed on the existing marker — leaving the winner's body
+    * paired with the loser's crc.  (Local publishes are hard links of
+    * a crc-less body now, see [[publishNew]].)  The body itself is
+    * intact and authoritative, so a ChecksumException here retries
+    * against the raw filesystem and best-effort deletes the torn
+    * sidecar (absence of a crc just means "unverified" locally; the
+    * marker is immutable after publish).  On real stores (HDFS/S3A)
+    * there is no client-side sidecar — a ChecksumException there is
+    * genuine corruption and propagates. */
   private def readSmall(f: FileSystem, p: Path): String = {
     def readVia(fsys: FileSystem): String = {
       val in = fsys.open(p)
@@ -170,34 +174,63 @@ object TxLog {
 
   /** Acquire the maintenance lease for `op`, or throw
     * [[IllegalStateException]] naming the current holder.  Same
-    * atomic tmp-write + no-overwrite-rename primitive as
-    * [[publishMarker]] (with the same POSIX-local-fs caveat).
-    * Returns the unique token [[releaseLease]] needs — only the
-    * acquirer's own lease is ever deleted, so a [[breakLease]] +
-    * re-acquire can't be clobbered by the crashed holder resuming. */
+    * atomic no-clobber publish as the commit markers
+    * ([[publishNew]]).  Returns the unique token [[releaseLease]]
+    * needs — only the acquirer's own lease is ever deleted, so a
+    * [[breakLease]] + re-acquire can't be clobbered by the crashed
+    * holder resuming. */
   private[graft] def acquireLease(spark: SparkSession, dir: String, op: String): String = {
     val (f, root) = fs(spark, dir)
     val token = s"$op pid=${ProcessHandle.current().pid()} " +
       s"thread=${Thread.currentThread().getId} nonce=${java.util.UUID.randomUUID()}"
+    if (publishNew(spark, f, root, leasePath(root), token)) token
+    else throw new IllegalStateException(
+      s"TxLog at $dir: cannot start '$op' — the writer lease is held by " +
+        s"[${leaseHolderDescribed(f, root)}]. The log is " +
+        "single-writer for maintenance; if the holder crashed, recover " +
+        "with TxLog.breakLease.")
+  }
+
+  /** Create `dest` holding `body` only if no file of that name exists —
+    * atomically, so of two racing callers exactly one gets true.  The
+    * body is written to `_commits/.tmp/<uuid>` first and made visible
+    * by one operation.  On the local filesystem that operation is a
+    * hard link, which fails if the name exists; Hadoop's local
+    * `Rename.NONE` checks for the name and then renames over it, so
+    * two callers can both pass the check.  Elsewhere it is
+    * `FileContext.rename(…, Rename.NONE)`, atomic on HDFS-likes.
+    * Returns false only when `dest` already exists; any other I/O
+    * failure propagates. */
+  private def publishNew(spark: SparkSession, f: FileSystem, root: Path,
+      dest: Path, body: String): Boolean = {
     val tmp = new Path(commitsPath(root), s".tmp/${java.util.UUID.randomUUID()}")
-    f.mkdirs(tmp.getParent)
-    val out = f.create(tmp, /*overwrite=*/ false)
-    try out.write(token.getBytes("UTF-8")) finally out.close()
-    val fc = FileContext.getFileContext(root.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    try {
-      fc.rename(fc.makeQualified(tmp), fc.makeQualified(leasePath(root)),
-        Options.Rename.NONE)
-      token
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-           _: java.nio.file.FileAlreadyExistsException =>
-        f.delete(tmp, false)
-        throw new IllegalStateException(
-          s"TxLog at $dir: cannot start '$op' — the writer lease is held by " +
-            s"[${leaseHolderDescribed(f, root)}]. The log is " +
-            "single-writer for maintenance; if the holder crashed, recover " +
-            "with TxLog.breakLease.")
+    val bytes = body.getBytes("UTF-8")
+    if (f.getUri.getScheme == "file") {
+      def local(p: Path) = java.nio.file.Paths.get(f.makeQualified(p).toUri)
+      val (t, d) = (local(tmp), local(dest))
+      // written through java.nio, not the checksummed Hadoop client:
+      // the linked name must not depend on a `.crc` sidecar that the
+      // link would not carry
+      java.nio.file.Files.createDirectories(t.getParent)
+      java.nio.file.Files.write(t, bytes, java.nio.file.StandardOpenOption.CREATE_NEW)
+      try { java.nio.file.Files.createLink(d, t); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      finally java.nio.file.Files.deleteIfExists(t)
+    } else {
+      f.mkdirs(tmp.getParent)
+      val out = f.create(tmp, /*overwrite=*/ false)
+      try out.write(bytes) finally out.close()
+      val fc = FileContext.getFileContext(root.toUri,
+        spark.sparkContext.hadoopConfiguration)
+      try {
+        fc.rename(fc.makeQualified(tmp), fc.makeQualified(dest), Options.Rename.NONE)
+        true
+      } catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+             _: java.nio.file.FileAlreadyExistsException =>
+          f.delete(tmp, false) // lost the race; dest is the winner's
+          false
+      }
     }
   }
 
@@ -359,7 +392,7 @@ object TxLog {
       if (isCommitted(spark, dir, batchId)) return false
       val staged = s"$batchId-${java.util.UUID.randomUUID()}"
       val stagedPath = new Path(root, s"_staged/$staged")
-      df.write.mode("overwrite").parquet(stagedPath.toString)
+      stage(df, stagedPath)
       afterStage()
       // re-check after the (slow) stage: maintenance that started
       // since the entry check must not be racing the marker publish
@@ -402,27 +435,46 @@ object TxLog {
         "vacuum's graceMs above the stage duration and retry.")
   }
 
-  /** Write the marker body to `_commits/.tmp/` then publish it with a
-    * no-overwrite rename.  Returns false only when the destination
-    * marker already exists (someone else committed). */
+  /** Publish marker `markerName` naming staged dir `staged`
+    * ([[publishNew]]).  Returns false only when the marker already
+    * exists (someone else committed). */
   private def publishMarker(spark: SparkSession, f: FileSystem, root: Path,
-      markerName: String, staged: String): Boolean = {
-    val commits = commitsPath(root)
-    val tmp = new Path(commits, s".tmp/${java.util.UUID.randomUUID()}")
-    f.mkdirs(tmp.getParent)
-    val out = f.create(tmp, /*overwrite=*/ false)
-    try out.write(staged.getBytes("UTF-8")) finally out.close()
-    val fc = FileContext.getFileContext(root.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    try {
-      fc.rename(fc.makeQualified(tmp), fc.makeQualified(new Path(commits, markerName)),
-        Options.Rename.NONE)
-      true
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-           _: java.nio.file.FileAlreadyExistsException =>
-        f.delete(tmp, false) // lost the race; marker content is the winner's
-        false
+      markerName: String, staged: String): Boolean =
+    publishNew(spark, f, root, new Path(commitsPath(root), markerName), staged)
+
+  /** The schema sidecar's name inside a staged dir — underscore-led,
+    * so parquet listings skip it like `_SUCCESS`. */
+  private val SchemaFile = "_schema"
+
+  /** Write `df` as the staged dir `path`, then record the schema a
+    * parquet scan of it reports (the written schema, all nullable). */
+  private def stage(df: DataFrame, path: Path): Unit = {
+    df.write.mode("overwrite").parquet(path.toString)
+    // no `.crc` beside a write-once one-line file
+    val f = path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
+    val out = f.create(new Path(path, SchemaFile), /*overwrite=*/ true)
+    try out.write(org.apache.spark.sql.graftshim.Bridge.asNullable(df.schema).json
+      .getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** Scan staged dirs.  When every dir recorded the same schema the
+    * scan takes it; otherwise (a dir staged before sidecars existed,
+    * or dirs that disagree) parquet infers it as before — one Spark
+    * job. */
+  private def readStaged(spark: SparkSession, f: FileSystem,
+      dirs: Seq[String]): DataFrame = {
+    val recorded = parMap(dirs)(d =>
+      try Some(readSmall(f, new Path(d, SchemaFile)))
+      catch { case _: java.io.FileNotFoundException => None })
+    recorded.distinct match {
+      case Seq(Some(json)) => spark.read.schema(
+        org.apache.spark.sql.types.DataType.fromJson(json)
+          .asInstanceOf[org.apache.spark.sql.types.StructType]).parquet(dirs: _*)
+      case _ => spark.read.parquet(dirs: _*)
     }
   }
 
@@ -431,7 +483,7 @@ object TxLog {
   def readCommitted(spark: SparkSession, dir: String): DataFrame = {
     val dirs = committedDirs(spark, dir)
     require(dirs.nonEmpty, s"TxLog at $dir has no committed batches")
-    spark.read.parquet(dirs: _*)
+    readStaged(spark, fs(spark, dir)._1, dirs)
   }
 
   /** ONE committed batch's rows — the incremental consumer's read
@@ -465,7 +517,7 @@ object TxLog {
         s"TxLog at $dir: batch $batchId is not committed")
     }
     val staged = readSmall(f, marker)
-    spark.read.parquet(new Path(root, s"_staged/$staged").toString)
+    readStaged(spark, f, Seq(new Path(root, s"_staged/$staged").toString))
   }
 
   /** Live writer batch ids (compaction-folded ids are subsumed by
@@ -483,26 +535,27 @@ object TxLog {
     val (f, root) = fs(spark, dir)
     val (ids, compactId) = liveMarkers(f, root)
     val names = compactId.map(cName).toSeq ++ ids.map(_.toString)
-    def readBody(n: String): String =
-      readSmall(f, new Path(commitsPath(root), n))
-    val bodies =
-      if (names.size <= bulkReadThreshold) names.map(readBody)
-      else {
-        // bounded thread pool over the marker files: each body is a
-        // one-line metadata read, so concurrency (not a Spark job)
-        // amortizes the per-open latency — see bulkReadThreshold
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(bulkReadParallelism)
-        try {
-          val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
-          scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(
-              names.map(n => scala.concurrent.Future(readBody(n))(ec)))(
-              scala.collection.BuildFrom.buildFromIterableOps, ec),
-            scala.concurrent.duration.Duration.Inf)
-        } finally pool.shutdown()
-      }
-    bodies.map(b => new Path(root, s"_staged/$b").toString)
+    parMap(names)(n => readSmall(f, new Path(commitsPath(root), n)))
+      .map(b => new Path(root, s"_staged/$b").toString)
   }
+
+  /** `fn` over metadata-sized reads: sequential up to
+    * [[bulkReadThreshold]] items, above it a bounded thread pool —
+    * each item is a one-line read, so concurrency (not a Spark job)
+    * amortizes the per-open latency. */
+  private def parMap[A, B](xs: Seq[A])(fn: A => B): Seq[B] =
+    if (xs.size <= bulkReadThreshold) xs.map(fn)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(bulkReadParallelism)
+      try {
+        val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
+        scala.concurrent.Await.result(
+          scala.concurrent.Future.sequence(
+            xs.map(x => scala.concurrent.Future(fn(x))(ec)))(
+            scala.collection.BuildFrom.buildFromIterableOps, ec),
+          scala.concurrent.duration.Duration.Inf)
+      } finally pool.shutdown()
+    }
 
   /** Fold committed batches into ONE, bounding the live-marker count
     * (the documented knob: compact before the log reaches ~10^5
@@ -586,8 +639,7 @@ object TxLog {
       new Path(root, s"_staged/${readSmall(f, new Path(commitsPath(root), n))}").toString
     }
     val staged = s"$marker-${java.util.UUID.randomUUID()}"
-    fold(spark.read.parquet(dirs: _*), ceiling).write.mode("overwrite")
-      .parquet(new Path(root, s"_staged/$staged").toString)
+    stage(fold(readStaged(spark, f, dirs), ceiling), new Path(root, s"_staged/$staged"))
     require(publishMarker(spark, f, root, marker, staged),
       s"TxLog.compact: marker $marker already exists in $dir — " +
         "a concurrent compactor is active; compaction requires the writer role")

@@ -246,10 +246,14 @@ object StreamingAgg {
 
   /** The state machine behind [[statefulDedupFirstTws]].  Per-key
     * state is ONE long (first-seen event-time ms) in a named
-    * `ValueState`; expiry is an explicit event-time timer per era.  A
-    * stale timer from a previous era (timers are not replaced the way
-    * `setTimeoutTimestamp` was) is made harmless by re-checking the
-    * TTL condition against the CURRENT state before clearing. */
+    * `ValueState`, and each key holds at most ONE live timer: the
+    * current era's expiry.  An era lapses once the watermark passes
+    * firstSeen + ttlMs, and an event-time timer fires once the
+    * watermark reaches its timestamp, so the expiry timer sits at
+    * firstSeen + ttlMs + 1 — it fires exactly when the era has lapsed,
+    * and firing clears the state.  A new era first deletes the
+    * previous era's timer (it would otherwise fire against the new
+    * state), so no key ever carries a stale timer. */
   private final class DedupFirstProcessor[K, V](ttlMs: Long)(
       implicit ordV: Ordering[V])
       extends StatefulProcessor[K, (K, java.sql.Timestamp, V), (K, java.sql.Timestamp, V)] {
@@ -258,6 +262,13 @@ object StreamingAgg {
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       firstSeen = getHandle.getValueState[Long]("firstSeen",
         Encoders.scalaLong, TTLConfig.NONE)
+
+    /** The era's expiry timer: one past its deadline, and — like
+      * setTimeoutTimestamp before it — above the current watermark,
+      * or the store rejects it (an era that lapsed on arrival expires
+      * at the next watermark advance). */
+    private def expiryOf(seenMs: Long, wm: Long): Long =
+      math.max(satAdd(satAdd(seenMs, ttlMs), 1L), wm + 1)
 
     override def handleInputRows(key: K,
         rows: Iterator[(K, java.sql.Timestamp, V)],
@@ -269,25 +280,32 @@ object StreamingAgg {
       else {
         val first = rows.minBy(r => (eventTimeMicros(r._2), r._3))
         firstSeen.update(first._2.getTime)
-        // the timer, like setTimeoutTimestamp before it, must sit
-        // above the current watermark or the store rejects it
-        getHandle.registerTimer(math.max(satAdd(first._2.getTime, ttlMs), wm + 1))
+        val at = expiryOf(first._2.getTime, wm)
+        // the previous era's timer is due in this very batch (its era
+        // lapsed); timers fire after input rows, so deleting it here
+        // keeps it from firing against the new era
+        val live = getHandle.listTimers().toSeq
+        live.filter(_ != at).foreach(getHandle.deleteTimer)
+        if (!live.contains(at)) getHandle.registerTimer(at)
         Iterator.single(first)
       }
     }
 
     override def handleExpiredTimer(key: K, tv: TimerValues,
         info: ExpiredTimerInfo): Iterator[(K, java.sql.Timestamp, V)] = {
-      // clear only if the CURRENT era has really lapsed — an expiring
-      // timer registered by an earlier era must not kill fresh state.
-      // When the guard fails (a stale earlier-era timer, or this era's
-      // timer delivered at exactly wm == deadline), re-register at
-      // deadline + 1 so cleanup is eventually retried — otherwise the
-      // only timer is consumed and an idle key's state is orphaned.
+      // clear only if the CURRENT era has really lapsed.  A timer this
+      // processor armed fires only then; any other (state written
+      // before the one-timer rule) must not kill live state, and the
+      // era then gets its own expiry timer so an idle key's state is
+      // never orphaned.  The firing timer is Spark's to delete.
       if (firstSeen.exists()) {
-        val deadline = satAdd(firstSeen.get(), ttlMs)
-        if (tv.getCurrentWatermarkInMs() > deadline) firstSeen.clear()
-        else getHandle.registerTimer(satAdd(deadline, 1L))
+        val seen = firstSeen.get()
+        val wm = tv.getCurrentWatermarkInMs()
+        if (wm > satAdd(seen, ttlMs)) firstSeen.clear()
+        else {
+          val at = expiryOf(seen, wm)
+          if (!getHandle.listTimers().contains(at)) getHandle.registerTimer(at)
+        }
       }
       Iterator.empty
     }
@@ -345,7 +363,7 @@ object StreamingAgg {
     * marker table turns replays into no-ops, and the index appends
     * themselves are replay-safe (each batch overwrites its own
     * batch_id partition).  Index state lives in
-    * the bh-bucketed tables, NOT the streaming state store — the
+    * the bucketed index tables, NOT the streaming state store — the
     * store would otherwise hold every signature in the corpus, while
     * the table form keeps the probe join's scale shape (only the new
     * batch shuffles; the index side never re-Exchanges).
@@ -672,20 +690,30 @@ object StreamingAgg {
     import graft.ext.{Components, Dedup}
     import graft.sources.TxLog
     val s = batch.sparkSession
+    // The resolved assignment BEFORE this batch, materialized once
+    // (localCheckpoint) when the assign layer runs: the contraction
+    // scans it twice (endpoint lookup, remap), and the after-state
+    // below is built on it.
+    var prior: Option[DataFrame] = None
     // The resolved assignment AFTER this batch's delta, shared by the
-    // survivor and emission layers and MATERIALIZED once
-    // (localCheckpoint): each layer scans the resolved state several
-    // times, and without the cut every scan would re-run the full
-    // log-resolution shuffle — per-batch cost would carry 3-4 log
-    // resolves instead of one (measured: ~35 % of the per-batch wall
-    // at steady state, CurationBench).  Lazy so a fully-replayed
-    // batch (every layer marker-gated) never pays it.  The driver
-    // reference dies with the step; the ContextCleaner releases the
-    // blocks on GC.
+    // survivor and emission layers.  It is the prior with the
+    // committed delta applied — the delta carries the newest batch
+    // id, so for its nodes it is what latest-per-node resolution of
+    // the log picks — at the cost of a broadcast anti-join over the
+    // materialized prior instead of a second resolve of the whole log.
+    // Only a crash-resumed batch whose assign layer had already
+    // committed resolves the log (materialized once, like the prior).
+    // Lazy so a fully-replayed batch (every layer marker-gated) never
+    // pays it.  The driver references die with the step; the
+    // ContextCleaner releases the blocks on GC.
     var afterCache: Option[DataFrame] = None
-    def resolvedAfter(): DataFrame = afterCache.getOrElse {
-      val r = Components.resolveAssignments(
-        TxLog.readCommitted(s, assignDir), idCol, "batch").localCheckpoint()
+    def resolvedAfter(delta: DataFrame): DataFrame = afterCache.getOrElse {
+      val r = prior match {
+        case Some(p) => p.join(broadcast(delta.select(col(idCol))), Seq(idCol), "left_anti")
+          .unionByName(delta)
+        case None => Components.resolveAssignments(
+          TxLog.readCommitted(s, assignDir), idCol, "batch").localCheckpoint()
+      }
       afterCache = Some(r); r
     }
     Dedup.ingestBatchIntoIndexTx(batch, batchId, idCol, textCol,
@@ -697,32 +725,31 @@ object StreamingAgg {
         pairsRaw
           .join(broadcast(p.toDF("id_a")), Seq("id_a"), "left_anti")
           .join(broadcast(p.toDF("id_b")), Seq("id_b"), "left_anti"))
-      // bootstrap: an empty log means this is the first batch —
-      // every endpoint enters the closure as its own root
-      val prior =
+      val p =
         if (TxLog.committedDirs(s, assignDir).nonEmpty)
-          // materialized once for the same reason as resolvedAfter:
-          // the contraction scans the prior state twice (endpoint
-          // lookup, remap) and each scan would otherwise re-resolve
           Components.resolveAssignments(
             TxLog.readCommitted(s, assignDir), idCol, "batch")
             .localCheckpoint()
         else {
+          // bootstrap: an empty log means this is the first batch —
+          // every endpoint enters the closure as its own root.  A
+          // local frame, so probing it runs no job
           val idT = pairs.schema(pairs.schema.fieldIndex("id_a")).dataType
-          s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
             org.apache.spark.sql.types.StructType(Seq(
               org.apache.spark.sql.types.StructField(idCol, idT),
               org.apache.spark.sql.types.StructField("component", idT))))
         }
+      prior = Some(p)
       val delta = Components.incrementalComponentsDelta(
-        prior, pairs, "id_a", "id_b", idCol)
+        p, pairs, "id_a", "id_b", idCol)
       TxLog.commitBatch(delta.withColumn("batch", lit(batchId)),
         assignDir, batchId)
     }
     layerHook("assign", batchId)
     if (!TxLog.isCommitted(s, survivorDir, batchId)) {
       val delta = TxLog.readBatch(s, assignDir, batchId).drop("batch")
-      val assignments = resolvedAfter()
+      val assignments = resolvedAfter(delta)
       val touchedMembers = assignments.join(
         broadcast(delta.select(col("component")).distinct()),
         Seq("component"), "left_semi")
@@ -742,7 +769,7 @@ object StreamingAgg {
       if (!TxLog.isCommitted(s, eDir, batchId)) {
         val delta = TxLog.readBatch(s, assignDir, batchId).drop("batch")
         val survivorBatch = TxLog.readBatch(s, survivorDir, batchId)
-        val emission = Components.emissionDelta(resolvedAfter(), delta,
+        val emission = Components.emissionDelta(resolvedAfter(delta), delta,
           survivorBatch, batch.select(col(idCol)), idCol)
         TxLog.commitBatch(emission.withColumn("batch", lit(batchId)),
           eDir, batchId)

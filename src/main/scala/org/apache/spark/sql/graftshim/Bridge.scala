@@ -50,6 +50,12 @@ object Bridge {
   def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** The schema a parquet scan reports for data written under
+    * `schema`: every field, element and value nullable
+    * (`StructType.asNullable` is `private[spark]`). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** Output-column name a Column binds to: its alias, or its
     * attribute name.  None for nameless computed expressions. */
   def columnName(c: Column): Option[String] = c.node match {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ext.Dedup
-import org.apache.spark.sql.functions.{col, round}
+import org.apache.spark.sql.functions.{col, concat, lit, regexp_replace, round}
 import org.scalatest.funsuite.AnyFunSuite
 
 class DedupSpec extends AnyFunSuite {
@@ -114,6 +114,39 @@ class DedupSpec extends AnyFunSuite {
       assert(spark.table("dedupspec_idx_shingles").count() == docs.count(),
         "replayed append must overwrite, not duplicate")
     } finally full.unpersist()
+  }
+
+  test("index probe: wide ids and an over-budget id set take the sized-cache path, same pairs") {
+    // long ids under the byte budget collect the candidate ids on the
+    // driver; string ids, and any id set over maxBroadcastBytes, size
+    // a persisted id cache instead (broadcast or shuffle semi-join) —
+    // every path must emit the same pairs
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val sdocs = docs.select(concat(lit("d-"), col("doc_id").cast("string")).as("doc_id"),
+      col("text"))
+    def norm(df: org.apache.spark.sql.DataFrame) = df
+      .select(regexp_replace(col("id_a").cast("string"), "d-", "").cast("long"),
+        regexp_replace(col("id_b").cast("string"), "d-", "").cast("long"),
+        round(col("jaccard"), 6))
+      .collect().map(r => (math.min(r.getLong(0), r.getLong(1)),
+        math.max(r.getLong(0), r.getLong(1)), r.getDouble(2))).toSet
+    try {
+      Dedup.writeLshIndex(docs.where(col("doc_id") < 300), "doc_id", "text", "dedupspec_wl")
+      val batch = docs.where(col("doc_id") >= 300)
+      val viaDriver = norm(Dedup.lshPairsAgainstIndex(batch, "doc_id", "text", "dedupspec_wl"))
+      assert(viaDriver.nonEmpty, "the slice must produce pairs for this spec to bite")
+      val overBudget = norm(Dedup.lshPairsAgainstIndex(batch, "doc_id", "text",
+        "dedupspec_wl", maxBroadcastBytes = 1L))
+      assert(overBudget == viaDriver)
+      // the same documents keyed by strings: "d-0".."d-299"
+      val stored = sdocs.where(regexp_replace(col("doc_id"), "d-", "").cast("long") < 300)
+      Dedup.writeLshIndex(stored, "doc_id", "text", "dedupspec_ws")
+      val viaCache = norm(Dedup.lshPairsAgainstIndex(
+        sdocs.where(regexp_replace(col("doc_id"), "d-", "").cast("long") >= 300),
+        "doc_id", "text", "dedupspec_ws"))
+      assert(viaCache == viaDriver)
+    } finally Seq("dedupspec_wl", "dedupspec_ws").flatMap(n => Seq(s"${n}_bands", s"${n}_shingles"))
+      .foreach(graft.sources.Tables.dropWithLocation(spark, _))
   }
 
   test("ingestBatchIntoIndex is idempotent on a replayed batch id") {

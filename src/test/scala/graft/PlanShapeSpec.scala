@@ -292,6 +292,65 @@ class PlanShapeSpec extends AnyFunSuite {
       .foreach(graft.sources.Tables.dropWithLocation(spark, _))
   }
 
+  test("q72: index probe reads the stored band table in place — no exchange over its scan") {
+    // the band join's key is (band_id, bh) and the stored table is
+    // bucketed on exactly that key, so only the batch side may move.
+    // Bucketed on bh alone the scan did not satisfy the join's
+    // distribution and the whole stored table was re-shuffled per
+    // batch (Exchange hashpartitioning(band_id, bh) over the scan)
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan,
+      UnaryExecNode, UnionExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.functions.col
+    // every node of the initial AND the final adaptive plan (whether
+    // the stored side needs a shuffle is decided at planning; AQE may
+    // re-plan the join afterwards), descending into AQE stages and the
+    // cached plans behind in-memory scans (the probe caches its
+    // candidate pairs, and the band join lives there)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.initialPlan) ++ nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    def isBandsScan(p: SparkPlan): Boolean = p match {
+      case f: FileSourceScanExec =>
+        f.tableIdentifier.exists(_.table == "planshape_q72b_idx_bands")
+      case _ => false
+    }
+    // the rows `p` outputs are the band scan's own rows: descend only
+    // through row-preserving operators — a join's or aggregate's
+    // output, a nested stage or a cache is other data
+    def movesBands(p: SparkPlan): Boolean = isBandsScan(p) || (p match {
+      case _: UnionExec => p.children.exists(movesBands)
+      case u: UnaryExecNode if !u.isInstanceOf[BaseAggregateExec] &&
+        !u.isInstanceOf[QueryStageExec] && !u.isInstanceOf[Exchange] =>
+        movesBands(u.child)
+      case _ => false
+    })
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    graft.ext.Dedup.writeLshIndex(docs.where(col("doc_id") < 400),
+      "doc_id", "text", "planshape_q72b_idx")
+    try {
+      // a batch of unknown size, like a streaming micro-batch: a
+      // scan's file-size statistic would let the planner broadcast the
+      // batch side and hide the stored side's distribution
+      val batch = spark.createDataFrame(docs.where(col("doc_id") >= 400).rdd, docs.schema)
+      val df = graft.ext.Dedup.lshPairsAgainstIndex(
+        batch, "doc_id", "text", "planshape_q72b_idx")
+      df.collect()
+      val all = nodes(df.queryExecution.executedPlan)
+      assert(all.exists(isBandsScan), "probe must read the stored band table")
+      val overBands = all.collect { case e: Exchange if movesBands(e.child) => e }
+      assert(overBands.isEmpty,
+        s"the stored band table must not enter an exchange:\n${overBands.mkString("\n")}")
+    } finally Seq("planshape_q72b_idx_bands", "planshape_q72b_idx_shingles")
+      .foreach(graft.sources.Tables.dropWithLocation(spark, _))
+  }
+
   test("q78 shape: runningFoldTws plans exactly one stateful exchange") {
     // the TWS running fold must group once for the state store and
     // never re-Exchange afterwards — same contract as q70's audit

@@ -69,7 +69,7 @@ class ShuffleBytesSpec extends AnyFunSuite {
           docs.where(col("doc_id") >= 400), "doc_id", "text",
           "shufbytes_q72_idx").count()
       }
-      assertCeiling("q72 probe", b, 384 << 10) // measured 121,715
+      assertCeiling("q72 probe", b, 192 << 10) // measured 120,296
     } finally Seq("shufbytes_q72_idx_bands", "shufbytes_q72_idx_shingles")
       .foreach(graft.sources.Tables.dropWithLocation(spark, _))
   }

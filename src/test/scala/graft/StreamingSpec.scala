@@ -287,6 +287,63 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("statefulDedupFirstTws: one live timer per key; an idle key is cleared after its TTL") {
+    // no-data batches off (the streaming benchmark's setting): a key's
+    // lapsed era then meets its next arrival in the same batch as its
+    // expiry timer, the case that used to leave two timers per key
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prevNoData = spark.conf.getOption(noData)
+    spark.conf.set(noData, "false")
+    try withRocksDb {
+      implicit val sq = spark.sqlContext
+      val in = MemoryStream[(String, Timestamp, Long)]
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_tws_timers").toString
+      val out = StreamingAgg.statefulDedupFirstTws(
+        in.toDS(), watermarkDelay = "0 seconds", ttlMs = 60 * 1000L)
+        .toDF("k", "ts", "v")
+      val q = out.writeStream.format("memory").queryName("sdedup_timer_sink")
+        .outputMode(OutputMode.Append).option("checkpointLocation", ckpt).start()
+      def t(sec: Int) = new Timestamp(1767225600000L + sec * 1000L)
+      // each batch runs under the watermark of the batches before it;
+      // returns (timers registered, timers expired) over the
+      // micro-batches the feed triggered (a data batch, plus the
+      // no-data batch a watermark advance may add)
+      var seen = 0
+      def feed(rows: (String, Timestamp, Long)*): (Long, Long) = {
+        in.addData(rows: _*)
+        q.processAllAvailable()
+        val ps = q.recentProgress.drop(seen)
+        seen += ps.length
+        val ms = ps.flatMap(_.stateOperators.headOption).map(_.customMetrics)
+        (ms.map(_.get("numRegisteredTimers").longValue).sum,
+          ms.map(_.get("numExpiredTimers").longValue).sum)
+      }
+      try {
+        assert(feed(("a", t(0), 1L)) == ((1L, 0L)))
+        assert(feed(("x", t(100), 2L))._1 == 1L)
+        // watermark 100 s: a's era (deadline 60 s) lapsed and a arrives
+        // again — ONE admission, so one registration: the old era's
+        // timer is deleted, not left to fire against the new era
+        // (which used to re-register a second timer for the key)
+        assert(feed(("a", t(110), 3L)) == ((1L, 0L)))
+        assert(feed(("y", t(300), 4L)) == ((1L, 0L)))
+        // watermark 300 s: a (deadline 170 s) and x (160 s) are idle
+        // past their TTL — their timers fire and clear their state
+        assert(feed(("z", t(310), 5L)) == ((1L, 2L)))
+      } finally q.stop()
+      val emitted = spark.sql("SELECT k, v FROM sdedup_timer_sink ORDER BY v")
+        .as[(String, Long)].collect().toSeq
+      assert(emitted == Seq(("a", 1L), ("x", 2L), ("a", 3L), ("y", 4L), ("z", 5L)))
+      val state = spark.read.format("statestore").option("path", ckpt)
+        .option("stateVarName", "firstSeen").load()
+        .select(col("key").getField("value").as("k")).as[String].collect().toSet
+      assert(state == Set("y", "z"), s"idle keys must be cleared, state holds $state")
+    } finally prevNoData match {
+      case Some(v) => spark.conf.set(noData, v)
+      case None    => spark.conf.unset(noData)
+    }
+  }
+
   test("statefulDedupFirst suppresses a late earlier-timestamped duplicate") {
     implicit val sq = spark.sqlContext
     val in = MemoryStream[(String, Timestamp, Long)]
@@ -508,6 +565,52 @@ class StreamingSpec extends AnyFunSuite {
           s"crash after '$layer': $log log diverged from the clean run " +
             s"(${crashed(log).size} vs ${control(log).size} rows)")
     }
+  }
+
+  test("curationStep: one incremental batch runs a bounded number of Spark jobs") {
+    // the curation sink is bound by per-job overhead at micro-batch
+    // sizes, so its job count is the cost figure that does not drift:
+    // each O(batch) frame is materialized once (74 jobs per batch
+    // before that rework, 45 after).  A new job on this path — a
+    // second resolve, a re-shingled batch, a schema-inference read —
+    // trips the ceiling
+    import graft.ext.Dedup
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      .where(col("doc_id") < 250)
+    val mid = docs.select("doc_id").as[Long].collect().sorted.apply(125)
+    val scoreOf = (df: org.apache.spark.sql.DataFrame) =>
+      df.select(col("doc_id")).withColumn("q", (col("doc_id") % 7).cast("double"))
+    val base = java.nio.file.Files.createTempDirectory("curjobs").toString
+    val name = "curjobs_idx"
+    Dedup.writeLshIndex(docs.where(lit(false)), "doc_id", "text", name)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def step(b: org.apache.spark.sql.DataFrame, k: Long,
+        hook: (String, Long) => Unit): Unit =
+      StreamingAgg.curationStep(b, k, "doc_id", "text", scoreOf, "q",
+        name, s"$base/pairs", s"$base/assign", s"$base/surv",
+        emitDir = Some(s"$base/emit"), minJaccard = 0.5, layerHook = hook)
+    try {
+      // batch 1 takes the bootstrap path; batch 2 is the measured one
+      step(docs.where(col("doc_id") < mid), 1L, (_, _) => ())
+      org.apache.spark.sql.graftshim.Bridge.drainListenerBus(spark)
+      spark.sparkContext.addSparkListener(l)
+      val perLayer = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+      try step(docs.where(col("doc_id") >= mid), 2L, (layer, _) => {
+        org.apache.spark.sql.graftshim.Bridge.drainListenerBus(spark)
+        perLayer(layer) = jobs.getAndSet(0)
+      }) finally spark.sparkContext.removeSparkListener(l)
+      val total = perLayer.values.sum
+      info(s"jobs per layer: ${perLayer.mkString(", ")}; total $total")
+      assert(perLayer.keySet == Set("pairs", "assign", "survivors", "emit"))
+      assert(total <= 48, s"one incremental curationStep batch ran $total Spark " +
+        s"jobs (${perLayer.mkString(", ")}), over the ceiling of 48")
+    } finally Seq(s"${name}_bands", s"${name}_shingles", s"${name}_batches")
+      .foreach(graft.sources.Tables.dropWithLocation(spark, _))
   }
 
   test("passageIndexSink warns (default-on) when a streamed batch runs " +
