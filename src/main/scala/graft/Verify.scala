@@ -19,7 +19,9 @@ object Verify {
   /** Writes each named query's result to `outDir/<name>` and the
     * matching oracle SQL to `outDir/oracle_sql.json`.  A query that
     * throws has its `outDir/<name>` removed, so an earlier run's output
-    * cannot pass the DuckDB compare in its place.  Ends with one
+    * cannot pass the DuckDB compare in its place, and its exception
+    * message recorded in `outDir/verify_status.json` (`{}` when none
+    * failed; `tools/check.py` prints the entries).  Ends with one
     * `[verify] k of n failed` line; returns the failed names. */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
       names: Seq[String]): Seq[String] = {
@@ -28,6 +30,7 @@ object Verify {
     require(unknown.isEmpty,
       s"not in SparkEntry.queries: ${unknown.mkString(", ")}")
     new java.io.File(outDir).mkdirs()
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val failed = names.filterNot { name =>
       val out = s"$outDir/$name"
       try {
@@ -41,6 +44,7 @@ object Verify {
         true
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
         graft.sources.Tables.deleteRec(Paths.get(out))
         false
       }
@@ -60,6 +64,8 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/verify_status.json"),
+      errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     val detail = if (failed.isEmpty) "" else s": ${failed.mkString(", ")}"
     System.err.println(s"[verify] ${failed.size} of ${names.size} failed$detail")
     failed

@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.functions.ColFns._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Embedding compression for vector stores — the storage-side prep
@@ -22,15 +22,22 @@ object Quantize {
     * L2 distance between the vector and its dequantized form —
     * strict left-to-right sum, so it is bit-replayable by an oracle. */
   def int8(emb: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val v = vecD(col(vecCol))
+    // the vector, its scale and the quantized ints are projected
+    // before the lambdas that read them (ColFns' lambda-capture rule):
+    // `scale` costs two passes over the vector and would otherwise
+    // run again on every element
+    val v = col("__v")
+    val scale = col("scale")
     val mx = array_max(transform(v, x => abs(x)))
-    val scale = when(mx === 0.0, lit(1.0)).otherwise(mx / 127.0)
-    val qv = transform(v, x => round(x / scale).cast("int"))
-    val err = sqrt(aggregate(
-      zip_with(v, qv, (x, q) => {
-        val d = x - q.cast("double") * scale; d * d
-      }),
-      lit(0.0), (acc, e) => acc + e))
-    emb.select(col(idCol), scale.as("scale"), qv.as("qvec"), err.as("recon_err"))
+    emb.select(col(idCol), vecD(col(vecCol)).as("__v"))
+      .select(col(idCol), v,
+        when(mx === 0.0, lit(1.0)).otherwise(mx / 127.0).as("scale"))
+      .select(col(idCol), v, scale,
+        transform(v, x => round(x / scale).cast("int")).as("qvec"))
+      .select(col(idCol), scale, col("qvec"), sqrt(aggregate(
+        zip_with(v, col("qvec"), (x, q) => {
+          val d = x - q.cast("double") * scale; d * d
+        }),
+        lit(0.0), (acc, e) => acc + e)).as("recon_err"))
   }
 }

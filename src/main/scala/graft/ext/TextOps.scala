@@ -173,7 +173,9 @@ object TextOps {
   /** Non-overlapping `width`-token chunks of the document, each
     * joined back to a string (the final chunk may be shorter).
     * Project this ONCE, then feed the resulting column to
-    * [[dedupChunks]] / [[droppedChunkCount]]. */
+    * [[dedupChunks]] / [[droppedChunkCount]].  `toks` is read inside
+    * the per-chunk lambda, so pass a projected token column, not
+    * `tokens(text)` inline (ColFns' lambda-capture rule). */
   def tokenChunks(toks: Column, width: Int): Column = {
     val nChunks = ceil(size(toks).cast("double") / width).cast("int")
     when(nChunks < 1, array().cast("array<string>")).otherwise(

@@ -17,6 +17,19 @@ import org.apache.spark.sql.functions._
   *    left-to-right (`aggregate` with 0.0 init ≡ DuckDB `list_reduce`);
   *  - hashes are md5-derived (md5 is identical everywhere), truncated
   *    to 60 bits so they stay positive in signed int64 arithmetic.
+  *
+  * Lambda-capture rule: a `transform`/`filter`/`aggregate`/`exists`/
+  * `zip_with` lambda must reference only its own variables, attributes
+  * and literals.  An outside expression named in the body (say
+  * `tokens(text)` inside `transform(idx, i -> element_at(toks, i))`)
+  * is re-evaluated on every lambda call — HOFs run interpreted, so no
+  * codegen CSE shares it — which makes a linear prep quadratic.
+  * Project the captured expression as its own column first, or use a
+  * native kernel that evaluates its input once ([[wordShingles]],
+  * [[charShingles]]).  A column referenced ONCE by the next
+  * projection is collapsed back into it by the optimizer, so a
+  * projection only helps when the lambda's input is referenced at
+  * least twice there.
   */
 object ColFns {
 
@@ -50,19 +63,22 @@ object ColFns {
   def tokens(text: Column): Column =
     filter(split(lower(text), " "), t => t =!= "")
 
-  /** Word n-gram shingles of a token array (empty if fewer than n). */
+  /** Word n-gram shingles of a token array (empty if fewer than n
+    * tokens or null): native one-walk kernel
+    * ([[graft.functions.cat.WordShingles]]), value-identical to the
+    * composed `transform(sequence(...), i -> concat_ws(...))` form. */
   def wordShingles(toks: Column, n: Int): Column = {
-    val idx = sequence(lit(1), greatest(size(toks) - (n - 1), lit(0)))
-    val grams = transform(idx, i =>
-      concat_ws(" ", (0 until n).map(j => element_at(toks, i + j)): _*))
-    when(size(toks) >= n, grams).otherwise(array().cast("array<string>"))
+    import org.apache.spark.sql.graftshim.Bridge
+    Bridge.column(graft.functions.cat.WordShingles(Bridge.expression(toks), n))
   }
 
-  /** Character n-gram shingles of a string (empty if shorter than n). */
+  /** Character n-gram shingles of a string (empty if shorter than n
+    * code points or null): native one-walk kernel
+    * ([[graft.functions.cat.CharShingles]]), value-identical to the
+    * composed `transform(sequence(...), i -> substr(text, i, n))` form. */
   def charShingles(text: Column, n: Int): Column = {
-    val idx = sequence(lit(1), greatest(length(text) - (n - 1), lit(0)))
-    val grams = transform(idx, i => substr(text, i, lit(n)))
-    when(length(text) >= n, grams).otherwise(array().cast("array<string>"))
+    import org.apache.spark.sql.graftshim.Bridge
+    Bridge.column(graft.functions.cat.CharShingles(Bridge.expression(text), n))
   }
 
   /** Strict left-to-right double dot product of two array<double>

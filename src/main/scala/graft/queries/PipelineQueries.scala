@@ -101,12 +101,16 @@ object PipelineQueries {
   /** DuckDB twin of ColFns.tokens. */
   private val toksSql = "list_filter(string_split(lower(text),' '), t -> t <> '')"
 
-  /** DuckDB twin of ColFns.wordShingles(n=3) + array_distinct. */
+  /** DuckDB twin of ColFns.wordShingles(n=3) + array_distinct — the
+    * oracle of the native WordShingles kernel, kept in the composed
+    * per-position form the kernel replaced. */
   private def shingles3Sql(t: String): String =
     s"list_distinct(CASE WHEN len($t)>=3 THEN list_transform(range(1, len($t)-1)," +
       s" i -> ($t)[i]||' '||($t)[i+1]||' '||($t)[i+2]) ELSE [] END)"
 
-  /** DuckDB twin of ColFns.charShingles(n) + distinct (input already lowercased). */
+  /** DuckDB twin of ColFns.charShingles(n) + distinct (input already
+    * lowercased) — the oracle of the native CharShingles kernel, kept
+    * in the composed per-position `substring` form the kernel replaced. */
   private def charShinglesSql(t: String, n: Int): String =
     s"list_distinct(CASE WHEN length($t)>=$n THEN list_transform(range(1, length($t)-${n - 2})," +
       s" i -> substring($t, i, $n)) ELSE [] END)"
@@ -2343,12 +2347,14 @@ object PipelineQueries {
   // both sides — zero shuffle, streams at scan speed; the chunk array
   // materializes as its own projection FIRST (the two-step TextOps
   // contract) so the dedup lambdas bind an attribute instead of
-  // re-deriving the chunks per invocation.  The oracle rebuilds the
-  // same first-occurrence index filter with list_position.
+  // re-deriving the chunks per invocation; the tokens are projected
+  // before it for the same reason (tokenChunks' lambda reads them).
+  // The oracle rebuilds the same first-occurrence index filter with
+  // list_position.
   def q98(s: SparkSession, dir: String): DataFrame =
     tbl(s, dir, "documents")
-      .select(col("doc_id"),
-        TextOps.tokenChunks(tokens(col("text")), width = 2).as("ch"))
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .select(col("doc_id"), TextOps.tokenChunks(col("toks"), width = 2).as("ch"))
       .select(col("doc_id"),
         TextOps.dedupChunks(col("ch")).as("kept_text"),
         TextOps.droppedChunkCount(col("ch")).as("n_dropped"))

@@ -1,17 +1,22 @@
 package graft
 
 import graft.functions.ColFns
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Native Catalyst expression semantics: [[graft.functions.cat.DotProductD]]
-  * must be bit-identical to the higher-order-function formulation it
-  * replaces (the DuckDB oracles were validated against that shape). */
+/** Native Catalyst expression semantics: each kernel
+  * ([[graft.functions.cat.DotProductD]], the md5 slices, the minhash
+  * signature, the word/char shingle kernels) must be value-identical to
+  * the higher-order-function formulation it replaces (the DuckDB
+  * oracles were validated against that shape). */
 class NativeExprSpec extends AnyFunSuite {
   private val spark = SparkTestBase.spark
   import spark.implicits._
 
-  private def hofDot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+  private def hofDot(a: Column, b: Column) =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
   test("native dot == interpreted HOF dot, bit-for-bit, random vectors") {
@@ -205,5 +210,122 @@ class NativeExprSpec extends AnyFunSuite {
     // "*(n)" prefixes mark WholeStageCodegen stages in plan strings
     assert(plan.contains("*(1) Project [graft_dot"), plan)
     assert(q.agg(sum(col("d"))).collect().head.getDouble(0) > 0)
+  }
+  // ---- shingle kernels vs the composed forms they replaced --------------
+  private def composedWordShingles(toks: Column, n: Int): Column = {
+    val idx = sequence(lit(1), greatest(size(toks) - (n - 1), lit(0)))
+    val grams = transform(idx, i =>
+      concat_ws(" ", (0 until n).map(j => element_at(toks, i + j)): _*))
+    when(size(toks) >= n, grams).otherwise(array().cast("array<string>"))
+  }
+
+  private def composedCharShingles(text: Column, n: Int): Column = {
+    val idx = sequence(lit(1), greatest(length(text) - (n - 1), lit(0)))
+    val grams = transform(idx, i => substr(text, i, lit(n)))
+    when(length(text) >= n, grams).otherwise(array().cast("array<string>"))
+  }
+
+  private val shingleSchema = StructType(Seq(
+    StructField("s", StringType), StructField("t", ArrayType(StringType))))
+
+  /** The same rows as an executor-side (codegen'd) frame and as a
+    * driver-local one (interpreted `eval`). */
+  private def shingleFrames(rows: Seq[Row]): Seq[DataFrame] = Seq(
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), shingleSchema),
+    spark.createDataFrame(rows.asJava, shingleSchema))
+
+  test("shingle kernels evaluate their input once per row") {
+    val acc = spark.sparkContext.longAccumulator("shingle-input-calls")
+    val countedToks = udf { (s: String) => acc.add(1); s.split(" ").toSeq }
+    val countedText = udf { (s: String) => acc.add(1); s }
+    val docs = shingleFrames(Seq.tabulate(20) { i =>
+      Row((0 until 10 + i).map(j => s"w${i * j % 7}").mkString(" "), null)
+    }).head
+    def calls(c: Column): Long = { acc.reset(); docs.select(c).collect(); acc.value }
+    assert(calls(ColFns.wordShingles(countedToks(col("s")), 3)) == 20)
+    assert(calls(ColFns.charShingles(countedText(col("s")), 5)) == 20)
+    // the measurement sees the hazard: the composed forms called the
+    // input about W·n (word) and L (char) times per row
+    assert(calls(composedWordShingles(countedToks(col("s")), 3)) > 20 * 10 * 3)
+    assert(calls(composedCharShingles(countedText(col("s")), 5)) > 20 * 10)
+  }
+
+  test("a projected column referenced once inside a lambda is inlined back") {
+    // why ColFns' lambda-capture rule asks for two references: the
+    // optimizer collapses a projection whose column the next one reads
+    // once, lambda or not, and the lambda then re-runs the producer
+    val acc = spark.sparkContext.longAccumulator("projected-input-calls")
+    val counted = udf { (s: String) => acc.add(1); s.split(" ").toSeq }
+    val docs = shingleFrames(Seq.fill(10)(Row("a b c d", null))).head
+      .select(counted(col("s")).as("toks"))
+    def calls(df: DataFrame): Long = { acc.reset(); df.collect(); acc.value }
+    val pick = (toks: Column) => transform(sequence(lit(1), lit(3)), i => element_at(toks, i))
+    assert(calls(docs.select(pick(col("toks")))) == 30)
+    assert(calls(docs.select(pick(col("toks")), size(col("toks")))) == 10)
+  }
+
+  test("shingle kernels == composed forms over random Unicode text and token arrays (scalacheck)") {
+    import org.scalacheck.{Gen, Prop}
+    // ASCII letters, spaces, 2-byte Latin-1, 3-byte CJK and 4-byte
+    // supplementary code points (surrogate pairs in a Java String)
+    val codePoint = Gen.frequency(5 -> Gen.choose(0x61, 0x7a), 2 -> Gen.const(0x20),
+      2 -> Gen.choose(0xe0, 0xff), 2 -> Gen.choose(0x4e00, 0x4e20),
+      2 -> Gen.choose(0x1f600, 0x1f640))
+    val str = Gen.choose(0, 12).flatMap(Gen.listOfN(_, codePoint))
+      .map(cps => new String(cps.toArray, 0, cps.size))
+    val text = Gen.frequency(1 -> Gen.const(null), 9 -> str)
+    val token = Gen.frequency(1 -> Gen.const(null), 1 -> Gen.const(""), 6 -> str)
+    val tokens = Gen.frequency(1 -> Gen.const(null),
+      9 -> Gen.choose(0, 8).flatMap(Gen.listOfN(_, token)))
+    val rows = Gen.listOfN(40, Gen.zip(text, tokens)).map(_.map { case (s, t) => Row(s, t) })
+    val prop = Prop.forAll(rows, Gen.choose(1, 5)) { (rs, n) =>
+      shingleFrames(rs).forall { df =>
+        df.select(
+          ColFns.wordShingles(col("t"), n), composedWordShingles(col("t"), n),
+          ColFns.charShingles(col("s"), n), composedCharShingles(col("s"), n))
+          .collect().forall(r => r.getSeq(0) == r.getSeq(1) && r.getSeq(2) == r.getSeq(3))
+      }
+    }
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(25), prop)
+    assert(res.passed, res.status.toString)
+    // the hand-picked edges: empty, shorter than n, exactly n,
+    // surrogate pairs, all-null and empty-string tokens
+    val edges = Seq(Row("", Seq()), Row("ab", Seq("a", "b")), Row("abc", Seq("a", "b", "c")),
+      Row("a\ud83d\ude00b\ud83d\ude01c", Seq(null, null, null)), Row("日本語", Seq("", "", "x", null)))
+    shingleFrames(edges).foreach { df =>
+      val got = df.select(ColFns.wordShingles(col("t"), 3), ColFns.charShingles(col("s"), 3))
+        .collect().map(r => (r.getSeq[String](0), r.getSeq[String](1))).toSeq
+      assert(got == Seq((Seq(), Seq()), (Seq(), Seq()), (Seq("a b c"), Seq("abc")),
+        (Seq(""), Seq("a\ud83d\ude00b", "\ud83d\ude00b\ud83d\ude01", "b\ud83d\ude01c")),
+        (Seq("  x", " x"), Seq("日本語"))))
+    }
+  }
+
+  test("shingle kernels keep the composed forms' type and nullability") {
+    val df = shingleFrames(Seq(Row("a b", Seq("a")))).head
+      .select(col("s"), col("t"), coalesce(col("s"), lit("")).as("s1"))
+    Seq("s", "s1").foreach { c =>
+      val q = df.select(ColFns.charShingles(col(c), 2).as("native"),
+        composedCharShingles(col(c), 2).as("composed"))
+      assert(q.schema("native").copy(name = "composed") == q.schema("composed"), q.schema)
+    }
+    val q = df.select(ColFns.wordShingles(col("t"), 2).as("native"),
+      composedWordShingles(col("t"), 2).as("composed"))
+    assert(q.schema("native").copy(name = "composed") == q.schema("composed"), q.schema)
+  }
+
+  test("shingle kernels run inside whole-stage codegen (no fallback)") {
+    val df = spark.range(100)
+      .select(concat_ws(" ", col("id").cast("string"), lit("x y z")).as("s"))
+    val q = df.select(ColFns.wordShingles(split(col("s"), " "), 2).as("w"),
+      ColFns.charShingles(col("s"), 3).as("c"))
+    val plan = q.queryExecution.executedPlan
+    assert(plan.toString.contains("*(1) Project [graft_word_shingles"), plan)
+    // compiled calls into the kernels, not an interpreted fallback
+    val code = org.apache.spark.sql.execution.debug.codegenString(plan)
+    assert(code.contains("graft.functions.cat.WordShingles.compute("), code)
+    assert(code.contains("graft.functions.cat.CharShingles.compute("), code)
+    assert(q.count() == 100)
   }
 }

@@ -20,6 +20,22 @@ class VerifySpec extends AnyFunSuite {
       assert(!Files.exists(stale), "stale output survived a failed query")
       val oracle = Files.readString(out.resolve("oracle_sql.json"))
       assert(oracle.startsWith("{\"q01_group_sum\": "))
+      // the failure is durable: the query and its exception message
+      val status = Files.readString(out.resolve("verify_status.json"))
+      assert(status.startsWith("{\"q01_group_sum\": \""), status)
+      assert(status.contains("no_such_sf"), status)
+    } finally sources.Tables.deleteRec(out)
+  }
+
+  test("a clean run records no failures, replacing an earlier status") {
+    val out = Files.createTempDirectory("verify_clean")
+    try {
+      Files.writeString(out.resolve("verify_status.json"),
+        "{\"q01_group_sum\": \"stale\"}")
+      val failed = Verify.dump(spark, "/root/testdata/sf0.001", out.toString,
+        Seq("q01_group_sum"))
+      assert(failed.isEmpty)
+      assert(Files.readString(out.resolve("verify_status.json")) == "{}")
     } finally sources.Tables.deleteRec(out)
   }
 

@@ -8,7 +8,8 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir> [--skip q,q,...]
 --skip names oracle entries to leave out (e.g. q19_ngram_jaccard at
 sf1, whose SQL replay is quadratic in candidate pairs); a query whose
 output dir is missing is also skipped when named here instead of
-counting as a failure.
+counting as a failure.  Queries Verify recorded as failed
+(verify_status.json) are printed first with their exception messages.
 """
 import argparse, json, os, re, sys
 import duckdb
@@ -76,6 +77,19 @@ def norm(v):
         return f"{v:.6f}"
     return str(v)
 
+def print_verify_status(out_dir):
+    """Echo Verify's durable failure record (verify_status.json: query
+    name -> exception message), first line of each message.  Those
+    queries have no output dir, so they also FAIL below."""
+    path = os.path.join(out_dir, "verify_status.json")
+    if not os.path.exists(path):
+        return
+    with open(path) as f:
+        status = json.load(f)
+    for name in sorted(status):
+        lines = status[name].splitlines()
+        print(f"VERIFY FAILED {name}: {lines[0] if lines else ''}")
+
 def main(sf_dir, out_dir, skip=(), no_shared=False):
     con = duckdb.connect()
     for t in TABLES:
@@ -84,6 +98,7 @@ def main(sf_dir, out_dir, skip=(), no_shared=False):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracles = json.load(f)
+    print_verify_status(out_dir)
     n_pass = n_fail = 0
     seen_chains, materialized = {}, set()
     for name in sorted(oracles):
