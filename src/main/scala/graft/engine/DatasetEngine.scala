@@ -1,7 +1,9 @@
 package graft.engine
 
+import scala.jdk.CollectionConverters._
+
 import graft.core._
-import org.apache.spark.sql.{Dataset, Encoder, TypedColumn}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 
 /** Typed engine: assembles an (Unpack, Assign, Reduce) triple into a
   * Spark `Dataset` plan — the analog of the reference's engines
@@ -12,22 +14,17 @@ import org.apache.spark.sql.{Dataset, Encoder, TypedColumn}
   * `groupByHashableKey`, `Engines/Streamly.hs:288-314`).
   *
   * Dispatch (the reference's `reduceFunction`, `Engines.hs:62-65`):
-  *  - key-independent [[Reduce.PerKeyFold]] → `Aggregator` with
-  *    map-side partial aggregation (never materializes a group);
+  *  - key-independent [[Reduce.PerKeyFold]] → one fused map-side pass
+  *    ([[foldPartition]]): unpack, assign and `step` run per row into
+  *    a per-partition hash map — the reference's `fromListWith` fold
+  *    into a mutable hashtable (`Engines.hs:90-107`) — which emits one
+  *    `(key, buffer)` per key; an `Aggregator` whose step and merge
+  *    are both the fold's `merge` combines the buffers across the
+  *    shuffle (never materializes a group);
   *  - key-dependent / whole-group → `mapGroups` (group streamed
   *    through an iterator, one group in memory at a time).
   */
 object DatasetEngine {
-
-  /** Compile a Fold into a typed aggregation column.  Folds that
-    * carry a buffer encoder ([[Fold.bufEncoder]], all of the shipped
-    * vocabulary) get codegen'd unsafe-row buffers across the shuffle;
-    * opaque folds fall back to Kryo blobs.  Hot untyped queries
-    * should still prefer [[FrameQuery]] native expressions. */
-  def aggOf[C, D](fd: Fold[C, D])(implicit ed: Encoder[D]): TypedColumn[C, D] = {
-    val aux: Fold.Aux[C, fd.Buf, D] = fd
-    FoldAggregator.auto(aux).toColumn
-  }
 
   /** Retry-exact counting effect: a Spark accumulator incremented
     * inside an `UnpackM`/`AssignM` effect is AT-LEAST-ONCE under task
@@ -86,17 +83,73 @@ object DatasetEngine {
       ek: Encoder[K],
       ed: Encoder[D],
       ekd: Encoder[(K, D)]): Dataset[(K, D)] = {
-    val pairs = unpackOnly(ds, u).map(y => (a.key(y), a.value(y)))
-    val grouped = pairs.groupByKey(_._1)
     val out: Dataset[(K, D)] = r match {
-      case Reduce.PerKeyFold(fd) =>
-        grouped.mapValues(_._2).agg(aggOf(fd))
+      case Reduce.PerKeyFold(fd) => foldPartition(ds, u, a, fd)
       case other =>
-        grouped.mapGroups((k, it) => (k, Reduce.run(other)(k, it.map(_._2))))
+        unpackOnly(ds, u).map(y => (a.key(y), a.value(y)))
+          .groupByKey(_._1)
+          .mapGroups((k, it) => (k, Reduce.run(other)(k, it.map(_._2))))
     }
     // column name differs by path: "key" (KeyValueGroupedDataset.agg)
     // vs "_1" (mapGroups tuple) — sort by position, not name
     if (ordered) out.orderBy(out.col(out.columns.head)) else out
+  }
+
+  /** The fused PerKeyFold plan: one `mapPartitions` runs unpack,
+    * assign and `fd.step` per row into a per-partition hash map and
+    * emits `(key, buffer)`; `groupByKey(_._1).agg(merge)` then combines
+    * the buffers, `merge` being a [[FoldAggregator]] whose step and
+    * merge are both `fd.merge` and whose finish is `fd.done`.  Input
+    * rows are deserialized once and cross no encoder between unpack
+    * and step; only the per-key buffers are re-encoded.
+    *
+    * Memory bound: the map holds at most
+    * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` keys
+    * (default 128), Spark's own limit on live object buffers per
+    * task.  A row whose key is not in a full map passes through as the
+    * single-row buffer `step(init, c)`; Spark's partial aggregate
+    * combines it, with its sort fallback and spill.  The buffer crosses
+    * the shuffle under `fd.bufEncoder`, else Kryo. */
+  private def foldPartition[X, Y, K, C, D](
+      ds: Dataset[X], u: Unpack[X, Y], a: Assign[Y, K, C], fd: Fold[C, D])(
+      implicit ek: Encoder[K], ed: Encoder[D]): Dataset[(K, D)] = {
+    implicit val bufEnc: Encoder[fd.Buf] = bufEncoderOf(fd)
+    implicit val kbEnc: Encoder[(K, fd.Buf)] = Encoders.tuple(ek, bufEnc)
+    val maxKeys = ds.sparkSession.sessionState.conf.objectAggSortBasedFallbackThreshold
+    val unpack: Iterator[X] => Iterator[Y] = u match {
+      case f: Unpack.Filter[X @unchecked] => xs => xs.filter(f.p)
+      case e: Unpack.Explode[X, Y @unchecked] => xs => xs.flatMap(x => e.f(x).iterator)
+    }
+    val partials = ds.mapPartitions(xs => foldInto(unpack(xs), a, fd, maxKeys))
+    val merge = new FoldAggregator[(K, fd.Buf), fd.Buf, D](
+      Fold[fd.Buf, fd.Buf, D](fd.init)(fd.merge)(fd.merge)(fd.done)
+        .premap[(K, fd.Buf)](_._2))(bufEnc, ed)
+    partials.groupByKey(_._1).agg(merge.toColumn)
+  }
+
+  /** The fold's Catalyst buffer encoder ([[Fold.bufEncoder]]), else Kryo. */
+  private def bufEncoderOf[C, D](fd: Fold[C, D]): Encoder[fd.Buf] =
+    fd.bufEncoder.getOrElse(
+      Encoders.kryo(scala.reflect.ClassTag.AnyRef.asInstanceOf[scala.reflect.ClassTag[fd.Buf]]))
+
+  /** One partition's map side of [[foldPartition]]: `step` each row
+    * into a hash map of at most `maxKeys` keys, pass a row whose key
+    * is not in a full map through as `step(init, c)`, and emit the map
+    * once the input is drained. */
+  private[graft] def foldInto[Y, K, C, D](
+      ys: Iterator[Y], a: Assign[Y, K, C], fd: Fold[C, D], maxKeys: Int)
+      : Iterator[(K, fd.Buf)] = {
+    val bufs = new java.util.HashMap[K, fd.Buf]()
+    val passed = ys.flatMap { y =>
+      val k = a.key(y)
+      val b = bufs.get(k)
+      if (b != null || bufs.containsKey(k)) {
+        bufs.put(k, fd.step(b, a.value(y))); Iterator.empty
+      } else if (bufs.size < maxKeys) {
+        bufs.put(k, fd.step(fd.init, a.value(y))); Iterator.empty
+      } else Iterator.single((k, fd.step(fd.init, a.value(y))))
+    }
+    passed ++ bufs.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue))
   }
 
   /** Skew-resistant variant of [[run]] for PerKeyFold reductions:
@@ -120,9 +173,7 @@ object DatasetEngine {
       ek: Encoder[K],
       ed: Encoder[D],
       ekd: Encoder[(K, D)]): Dataset[(K, D)] = {
-    import org.apache.spark.sql.Encoders
-    implicit val bufEnc: Encoder[fd.Buf] = fd.bufEncoder.getOrElse(
-      Encoders.kryo(scala.reflect.ClassTag.AnyRef.asInstanceOf[scala.reflect.ClassTag[fd.Buf]]))
+    implicit val bufEnc: Encoder[fd.Buf] = bufEncoderOf(fd)
     implicit val ksEnc: Encoder[(K, Int)] = Encoders.tuple(ek, Encoders.scalaInt)
     implicit val kscEnc: Encoder[((K, Int), C)] = Encoders.tuple(ksEnc, ec)
     implicit val kbEnc: Encoder[(K, fd.Buf)] = Encoders.tuple(ek, bufEnc)

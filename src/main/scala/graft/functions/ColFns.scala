@@ -11,8 +11,15 @@ import org.apache.spark.sql.functions._
   * SAME constants, so Spark results and the oracle stay bit-identical.
   *
   * Numeric-determinism policy (so results hash-match any engine):
-  *  - money columns (2-decimal doubles) are summed exactly via
-  *    `DECIMAL(18,2)` and only cast back to double at the end;
+  *  - money columns (2-decimal doubles) are summed exactly: the
+  *    defining form is `CAST(sum(CAST(x AS DECIMAL(18,2))) AS DOUBLE)`
+  *    (what the oracles run), computed by [[sumMoney]] as long cents.
+  *    Fast path: `cents = rint(x·100)` when `|x| < 2^44` and
+  *    `rint(x·100)/100 == x` — below 2^44 doubles are spaced at most
+  *    2^-9 < 0.005 apart, so the cast's HALF_UP rounding of x is that
+  *    integer.  Fallback: every other row (more decimals, NaN, ±Inf,
+  *    |x| ≥ 1e16) takes the unscaled value of the same decimal cast,
+  *    errors and nulls included ([[graft.functions.cat.MoneySum]]);
   *  - float vectors are cast to double and reduced strictly
   *    left-to-right (`aggregate` with 0.0 init ≡ DuckDB `list_reduce`);
   *  - hashes are md5-derived (md5 is identical everywhere), truncated
@@ -33,12 +40,17 @@ import org.apache.spark.sql.functions._
   */
 object ColFns {
 
-  /** Exact sum of a 2-decimal-valued double column: decimal-sum then
-    * back to double.  Addition over decimals is exact, so the result
-    * is independent of partitioning/merge order — unlike a naive
-    * double sum, which differs in final ulps between engines. */
-  def sumMoney(c: Column): Column =
-    sum(c.cast("decimal(18,2)")).cast("double")
+  /** Exact sum of a 2-decimal-valued double column, value-identical
+    * to `sum(c.cast("decimal(18,2)")).cast("double")`: a native
+    * aggregate over long cents ([[graft.functions.cat.MoneySum]]), so
+    * the hash aggregate stays codegen'd with a fixed-width buffer.
+    * Integer addition is exact, so the result is independent of
+    * partitioning/merge order — unlike a naive double sum, which
+    * differs in final ulps between engines. */
+  def sumMoney(c: Column): Column = {
+    import org.apache.spark.sql.graftshim.Bridge
+    Bridge.column(graft.functions.cat.MoneySum(Bridge.expression(c)).toAggregateExpression())
+  }
 
   /** Exact mean built from [[sumMoney]] / count — deterministic. */
   def avgMoney(c: Column): Column = sumMoney(c) / count(c)

@@ -189,4 +189,83 @@ class EngineDiffSpec extends AnyFunSuite {
     val total = Simple.concatFold(perKey.map(_._2))(_ + _)
     assert(total == xs.sum)
   }
+
+  // ---- the fused PerKeyFold pass: bounded per-partition map ------------
+  /** Two partitions of `keysPerPart` keys each (half shared), three
+    * rows per key, shuffled within each partition. */
+  private def keyedRows(keysPerPart: Int): org.apache.spark.sql.Dataset[(Int, Long)] = {
+    val r = new scala.util.Random(keysPerPart)
+    val parts = (0 until 2).map { p =>
+      r.shuffle((0 until keysPerPart).flatMap { i =>
+        val k = p * keysPerPart / 2 + i
+        Seq.fill(3)((k, r.nextInt(1000).toLong))
+      })
+    }
+    spark.createDataset(spark.sparkContext.parallelize(parts.flatten, 2))
+  }
+
+  private val bound =
+    spark.sessionState.conf.objectAggSortBasedFallbackThreshold
+
+  test("fused fold == plain-Scala fold at 1, bound-1, bound, bound+1 and 10k keys per partition") {
+    assert(bound == 128, "the pass reads Spark's object-buffer limit (default 128)")
+    val filter = Unpack.Filter[(Int, Long)](_._2 % 5 != 0)
+    val explode = Unpack.Explode[(Int, Long), (Int, Long)](x => Seq(x, (x._1 + 1, -x._2)))
+    val a = Assign.of[(Int, Long), Int, Long](_._1)(_._2)
+    val fd = Folds.sum[Long].zip(Folds.count[Long])
+    for (n <- Seq(1, bound - 1, bound, bound + 1, 10000); ordered <- Seq(false, true)) {
+      val xs = keyedRows(n)
+      val local = xs.collect().toSeq
+      for ((name, u, ys) <- Seq(("filter", filter, local.filter(filter.p)),
+                                ("explode", explode, local.flatMap(explode.f)))) {
+        val expected = ys.groupBy(_._1).map { case (k, g) => k -> fd.fold(g.map(_._2)) }
+        val got = DatasetEngine.run(xs, u, a, Reduce.fromFold[Int, Long, (Long, Long)](fd),
+          ordered = ordered).collect().toSeq
+        assert(got.toMap == expected && got.size == expected.size, s"$name n=$n ordered=$ordered")
+        if (ordered) assert(got.map(_._1) == got.map(_._1).sorted, s"$name n=$n")
+      }
+    }
+  }
+
+  test("fused fold's map holds at most the bound: later keys pass through row by row") {
+    val a = Assign.of[(Int, Long), Int, Long](_._1)(_._2)
+    val fd = Folds.sum[Long]
+    for (n <- Seq(1, bound - 1, bound, bound + 1, 10000)) {
+      // one partition's rows: n keys, three rows each
+      val rows = keyedRows(n).rdd.glom().collect().head.toSeq
+      val out = DatasetEngine.foldInto(rows.iterator, a, fd, bound).toList
+      val keys = rows.map(_._1).distinct
+      // the first `bound` keys seen fold in the map; the rest pass through
+      val mapped = keys.take(bound).toSet
+      assert(out.size == mapped.size + rows.count(r => !mapped(r._1)), s"n=$n")
+      assert(out.groupMapReduce(_._1)(_._2)(_ + _) == rows.groupMapReduce(_._1)(_._2)(_ + _))
+    }
+  }
+
+  test("fused fold with a Kryo buffer == plain-Scala fold past the key bound") {
+    // a List buffer has no Catalyst encoder: it crosses the shuffle as Kryo
+    val fd = Fold[Long, List[Long], Long](Nil)((s, a) => a :: s)(_ ++ _)(_.sorted.take(2).sum)
+    assert(fd.bufEncoder.isEmpty)
+    val xs = keyedRows(bound + 1)
+    val a = Assign.of[(Int, Long), Int, Long](_._1)(_._2)
+    val expected = xs.collect().toSeq.groupBy(_._1).map { case (k, g) => k -> fd.fold(g.map(_._2)) }
+    val got = DatasetEngine.run(xs, Unpack.none[(Int, Long)], a,
+      Reduce.fromFold[Int, Long, Long](fd)).collect().toMap
+    assert(got == expected)
+  }
+
+  test("fused fold runs exactly one step per unpacked row") {
+    val steps = spark.sparkContext.longAccumulator("fold-steps")
+    val fd = Fold[Long, Long, Long](0L) { (s, a) => steps.add(1); s + a }(_ + _)(identity)
+    val u = Unpack.Explode[(Int, Long), (Int, Long)](x => Seq.fill((x._2 % 3).toInt)(x))
+    val a = Assign.of[(Int, Long), Int, Long](_._1)(_._2)
+    for (n <- Seq(bound - 1, bound + 1, 10000)) {
+      val xs = keyedRows(n)
+      val unpacked = xs.collect().toSeq.flatMap(u.f)
+      steps.reset()
+      val got = DatasetEngine.run(xs, u, a, Reduce.fromFold[Int, Long, Long](fd)).collect().toMap
+      assert(got == unpacked.groupBy(_._1).map { case (k, g) => k -> g.map(_._2).sum })
+      assert(steps.value == unpacked.size.toLong, s"n=$n")
+    }
+  }
 }

@@ -11,13 +11,27 @@ import org.scalatest.funsuite.AnyFunSuite
   * ([[graft.functions.cat.DotProductD]], the md5 slices, the minhash
   * signature, the word/char shingle kernels) must be value-identical to
   * the higher-order-function formulation it replaces (the DuckDB
-  * oracles were validated against that shape). */
+  * oracles were validated against that shape).
+  *
+  * The spec runs on its own extension-free session: under
+  * `GraftExtensions`, `DotProductRewrite` turns the HOF reference into
+  * the native expression, and the comparisons would check native
+  * against native. */
 class NativeExprSpec extends AnyFunSuite {
-  private val spark = SparkTestBase.spark
+  private val spark =
+    org.apache.spark.sql.graftshim.TestSessions.withoutExtensions(SparkTestBase.spark)
   import spark.implicits._
 
   private def hofDot(a: Column, b: Column) =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
+
+  test("the spec's session is extension-free: the HOF dot stays a HOF") {
+    def plan(s: org.apache.spark.sql.SparkSession) =
+      s.range(3).select(array(col("id").cast("double")).as("a"))
+        .select(hofDot(col("a"), col("a"))).queryExecution.optimizedPlan.toString
+    assert(!plan(spark).contains("graft_dot"), plan(spark))
+    assert(plan(SparkTestBase.spark).contains("graft_dot"), plan(SparkTestBase.spark))
+  }
 
   test("native dot == interpreted HOF dot, bit-for-bit, random vectors") {
     val rnd = new scala.util.Random(3)
@@ -115,8 +129,8 @@ class NativeExprSpec extends AnyFunSuite {
         .collect().head
       assert(hs.getLong(0) == hs.getString(1).toLong)
     } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(SparkTestBase.spark)
+      SparkSession.setActiveSession(SparkTestBase.spark)
     }
   }
 
@@ -139,8 +153,8 @@ class NativeExprSpec extends AnyFunSuite {
       }.sum
       assert(q.agg(sum(col("d"))).as[Double].collect().head == expect)
     } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(SparkTestBase.spark)
+      SparkSession.setActiveSession(SparkTestBase.spark)
     }
   }
 

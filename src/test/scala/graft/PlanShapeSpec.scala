@@ -34,6 +34,25 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"))
   }
 
+  test("typed PerKeyFold: one fused MapPartitions under the partial aggregate, no per-row chain") {
+    import graft.core._
+    import graft.engine.DatasetEngine
+    import spark.implicits._
+    val ds = spark.createDataset((0 until 1000).map(i => (s"k${i % 26}", i)))
+    val q = DatasetEngine.run(ds, Unpack.Filter[(String, Int)](_._2 % 2 == 0),
+      Assign.of[(String, Int), String, Double](_._1)(_._2.toDouble),
+      Reduce.fromFold[String, Double, Double](Folds.mean))
+    val p = plan(q.toDF())
+    // the operators from the partial aggregate down to the scan
+    val below = p.linesIterator.map(_.trim.replaceAll("^[+:\\-\\s]*(\\*\\(\\d+\\) )?", ""))
+      .map(_.takeWhile(c => c != ' ' && c != '('))
+      .dropWhile(_ != "ObjectHashAggregate").drop(1)
+      .dropWhile(_ != "ObjectHashAggregate").drop(1).toList
+    assert(below.takeWhile(_ != "LocalTableScan") ==
+      List("AppendColumnsWithObject", "MapPartitions", "DeserializeToObject"), s"$below\n$p")
+    assert(countOf(p, "MapElements") == 0 && countOf(p, "AppendColumns ") == 0, p)
+  }
+
   test("q02: filter pushed to the parquet scan; columns pruned") {
     val p = plan(RefQueries.q02(spark, sf))
     assert(p.contains("PushedFilters: [IsNotNull(l_discount), GreaterThan(l_discount,0.05)]"),

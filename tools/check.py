@@ -4,12 +4,19 @@ parquet, run the matching oracle SQL in DuckDB over the same testdata,
 and diff (columns sorted by name, rows sorted, values stringified).
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [--skip q,q,...]
+       python3 tools/check.py <sfDir> <verifyOutDir> --against <otherOutDir>
 
 --skip names oracle entries to leave out (e.g. q19_ngram_jaccard at
 sf1, whose SQL replay is quadratic in candidate pairs); a query whose
 output dir is missing is also skipped when named here instead of
 counting as a failure.  Queries Verify recorded as failed
 (verify_status.json) are printed first with their exception messages.
+
+--against compares the two Verify output dirs with each other instead
+of with the oracle: row for row at full precision (floats by their
+shortest round-trip repr), listing every query whose rows differ or
+that only one dir has.  Use it to show a change leaves outputs
+bit-identical to a parent build.
 """
 import argparse, json, os, re, sys
 import duckdb
@@ -152,6 +159,46 @@ def main(sf_dir, out_dir, skip=(), no_shared=False):
     print(f"\n{n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0
 
+def exact(v):
+    """Full-precision cell text: repr keeps every bit of a float."""
+    if isinstance(v, float):
+        return repr(v)
+    return "NULL" if v is None else str(v)
+
+def read_rows(con, path):
+    t = con.execute(f"SELECT * FROM '{path}/*.parquet'").fetch_arrow_table()
+    cols = sorted(t.column_names)
+    return cols, sorted(tuple(exact(t.column(c)[i].as_py()) for c in cols)
+                        for i in range(t.num_rows))
+
+def against(out_dir, other_dir, skip=()):
+    """Row-for-row, full-precision diff of two Verify output dirs."""
+    con = duckdb.connect()
+    def queries(d):
+        return {n for n in os.listdir(d) if os.path.isdir(os.path.join(d, n))}
+    mine, theirs = queries(out_dir), queries(other_dir)
+    n_same, differ = 0, []
+    for name in sorted((mine | theirs) - set(skip)):
+        if name not in mine or name not in theirs:
+            differ.append(name)
+            print(f"DIFF {name}: only in {out_dir if name in mine else other_dir}")
+            continue
+        a = read_rows(con, os.path.join(out_dir, name))
+        b = read_rows(con, os.path.join(other_dir, name))
+        if a == b:
+            n_same += 1
+            continue
+        differ.append(name)
+        print(f"DIFF {name}: columns {a[0]} vs {b[0]}, rows {len(a[1])} vs {len(b[1])}")
+        shown = 0
+        for x, y in zip(a[1], b[1]):
+            if x != y and shown < 5:
+                print(f"  {out_dir}: {x}\n  {other_dir}: {y}")
+                shown += 1
+    print(f"\n{n_same} identical, {len(differ)} differ" +
+          (f": {','.join(differ)}" if differ else ""))
+    return 1 if differ else 0
+
 if __name__ == "__main__":
     ap = argparse.ArgumentParser(description=__doc__,
                                  formatter_class=argparse.RawDescriptionHelpFormatter)
@@ -161,8 +208,13 @@ if __name__ == "__main__":
                     help="comma-separated oracle names to leave out")
     ap.add_argument("--no-shared", action="store_true",
                     help="disable shared-CTE materialization (A/B timing)")
+    ap.add_argument("--against", metavar="OTHER_OUT_DIR",
+                    help="diff verifyOutDir against another Verify output dir "
+                         "at full precision instead of running the oracle")
     args = ap.parse_args()
     skip = tuple(s for s in args.skip.split(",") if s)
+    if args.against:
+        sys.exit(against(args.out_dir, args.against, skip))
     with open(os.path.join(args.out_dir, "oracle_sql.json")) as f:
         known = set(json.load(f))
     unknown = [s for s in skip if s not in known]
