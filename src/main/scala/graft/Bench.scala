@@ -377,7 +377,8 @@ object Bench {
     // gram-granularity heavyweight (8-gram explode with positions, two
     // gram-hash shuffles, broadcast mark rebuild).  Runs last so its
     // wake can't pollute any other block.  (b12 is the CurationBench
-    // log-growth curve in BASELINE.md, not a Bench block.)
+    // log-growth curve in BASELINE.md, not a Bench block; CurationBench
+    // is at `4740777:src/main/scala/graft/tools/CurationBench.scala`.)
     val b13 = best5Loaded {
       PipelineQueries.q106(spark, sfDir).count(); spark.catalog.clearCache()
     }

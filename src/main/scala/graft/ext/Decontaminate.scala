@@ -222,12 +222,13 @@ object Decontaminate {
   //
   // AMORTIZATION CONTRACT for the stored-side scan (the honest
   // linear term, measured in IndexBench `passage` across a 64x
-  // octave): the probe join reads the whole keeper table per batch —
+  // octave, `4740777:src/main/scala/graft/tools/IndexBench.scala`):
+  // the probe join reads the whole keeper table per batch —
   // 16 bytes/row of columnar (h, keeper) longs — and uniform 60-bit
   // hashes defeat every skipping lever: min/max row-group stats are
   // useless, and parquet column bloom filters cannot skip either
   // because a batch-sized probe set (tens of thousands of uniform
-  // hashes) hits every row group (IndexBench `pasbloom` measures the
+  // hashes) hits every row group (IndexBench `pasbloom` measured the
   // negative).  The lever that works is BATCH SIZING: per-batch scan
   // cost is keeperRows x 16 B / scan-bandwidth, so per-DOC cost
   // stays constant when batches grow proportionally to the index —
@@ -246,7 +247,8 @@ object Decontaminate {
     * batches grow proportionally to the index.  `amortizationFactor`
     * F bounds the stored-scan overhead at F× the batch's own bytes:
     * the default 64 matches the measured IndexBench `passage` octave
-    * (0.177 ms/doc flat when batch ∝ index at 64×). */
+    * (0.177 ms/doc flat when batch ∝ index at 64×;
+    * `4740777:src/main/scala/graft/tools/IndexBench.scala`). */
   def recommendedBatchGrams(keeperRows: Long,
       amortizationFactor: Long = 64L): Long = {
     require(amortizationFactor > 0,

@@ -742,8 +742,9 @@ object Dedup {
     * marker file), and the probe reads the WHOLE table, so per-batch
     * wall time grows linearly with batches-since-compaction no matter
     * how aggressively the downstream TxLogs are folded
-    * (`tools/CurationBench` measures exactly that: TxLog-only
-    * compaction leaves the growth curve unchanged).
+    * (CurationBench at `4740777:src/main/scala/graft/tools/CurationBench.scala`
+    * measured exactly that: TxLog-only compaction left the growth
+    * curve unchanged).
     *
     * Replay safety — the part that makes this more than a file
     * rewrite: only partitions whose batch id is MARKED in

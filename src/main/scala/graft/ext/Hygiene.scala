@@ -104,6 +104,7 @@ object Hygiene {
     * keep it covered).
     *
     * Default SIZED BY MEASUREMENT (IndexBench `repairids`, round 15,
+    * `4740777:src/main/scala/graft/tools/IndexBench.scala`,
     * 2M-row clean-log-shaped table, ids spread across row groups —
     * the honest storm shape): boxed ids ~26 B each (0.2 MB at 10^4,
     * ~5 MB at 2x10^5 — never the binding constraint); isin/InSet

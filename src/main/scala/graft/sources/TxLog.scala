@@ -104,7 +104,8 @@ object TxLog {
     * sequential loop.  (A distributed `spark.read.textFile` pass was
     * tried first and measured 8× SLOWER than even the serial loop at
     * 10^4 markers — Spark's per-tiny-file listing/split overhead
-    * dwarfs the ~0.3 ms/marker open cost; tools/TxLogBench holds the
+    * dwarfs the ~0.3 ms/marker open cost; TxLogBench at
+    * `4740777:src/main/scala/graft/tools/TxLogBench.scala` holds the
     * curve.  Concurrency, not distribution, is the right tool for
     * 10^4-10^5 metadata-sized reads.) */
   val bulkReadThreshold: Int = 1024
@@ -529,8 +530,8 @@ object TxLog {
 
   /** The staged dirs the live markers resolve to — the path-resolution
     * step [[readCommitted]] pays before its parquet scan (exposed for
-    * callers that compose their own read, and for measuring marker
-    * cost at scale: tools/TxLogBench). */
+    * callers that compose their own read, and for counting marker
+    * cost: ScaleSpec pins one listing and one read per live marker). */
   def committedDirs(spark: SparkSession, dir: String): Seq[String] = {
     val (f, root) = fs(spark, dir)
     val (ids, compactId) = liveMarkers(f, root)

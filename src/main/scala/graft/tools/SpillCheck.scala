@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-
 /** Spill-regime correctness slice: the gate always runs with 128 GiB
   * of headroom, so its external sort/aggregate paths never spill —
   * a merge bug that only shows under memory pressure would pass every
@@ -79,20 +77,13 @@ object SpillCheck {
       .config("spark.sql.TungstenAggregate.testFallbackStartsAt", "100,500")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    var spilledMem = 0L; var spilledDisk = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        Option(t.taskMetrics).foreach { m =>
-          spilledMem += m.memoryBytesSpilled
-          spilledDisk += m.diskBytesSpilled
-        }
-    })
-    val failed = try graft.Verify.dump(spark, sfDir, outDir, Slice)
+    val (failed, spill) = try graft.obs.Counters.of(spark)(
+        graft.Verify.dump(spark, sfDir, outDir, Slice))
       finally spark.stop()
-    println(f"[spillcheck] memoryBytesSpilled=$spilledMem%d " +
-      f"diskBytesSpilled=$spilledDisk%d")
+    println(f"[spillcheck] memoryBytesSpilled=${spill.memorySpilled}%d " +
+      f"diskBytesSpilled=${spill.diskSpilled}%d")
     assert(failed.isEmpty, s"queries failed under forced spill: ${failed.mkString(", ")}")
-    assert(spilledMem > 0 || spilledDisk > 0,
+    assert(spill.memorySpilled > 0 || spill.diskSpilled > 0,
       "force-spill knobs produced zero spills — the slice proved nothing")
   }
 }

@@ -214,7 +214,8 @@ class DecontaminateSpec extends AnyFunSuite {
 
   test("the amortization cadence contract: recommended batch grams and the lag predicate") {
     // batch ∝ index: recommended grams = keeperRows / 64 (the
-    // measured IndexBench `passage` octave), floored at 1
+    // measured IndexBench `passage` octave,
+    // `4740777:src/main/scala/graft/tools/IndexBench.scala`), floored at 1
     assert(Decontaminate.recommendedBatchGrams(6400L) == 100L)
     assert(Decontaminate.recommendedBatchGrams(64L) == 1L)
     assert(Decontaminate.recommendedBatchGrams(10L) == 1L)

@@ -317,39 +317,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // Bucketed on bh alone the scan did not satisfy the join's
     // distribution and the whole stored table was re-shuffled per
     // batch (Exchange hashpartitioning(band_id, bh) over the scan)
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan,
-      UnaryExecNode, UnionExec}
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
     import org.apache.spark.sql.functions.col
-    // every node of the initial AND the final adaptive plan (whether
-    // the stored side needs a shuffle is decided at planning; AQE may
-    // re-plan the join afterwards), descending into AQE stages and the
-    // cached plans behind in-memory scans (the probe caches its
-    // candidate pairs, and the band join lives there)
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.initialPlan) ++ nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
-      case other => other +: other.children.flatMap(nodes)
-    }
-    def isBandsScan(p: SparkPlan): Boolean = p match {
-      case f: FileSourceScanExec =>
-        f.tableIdentifier.exists(_.table == "planshape_q72b_idx_bands")
-      case _ => false
-    }
-    // the rows `p` outputs are the band scan's own rows: descend only
-    // through row-preserving operators — a join's or aggregate's
-    // output, a nested stage or a cache is other data
-    def movesBands(p: SparkPlan): Boolean = isBandsScan(p) || (p match {
-      case _: UnionExec => p.children.exists(movesBands)
-      case u: UnaryExecNode if !u.isInstanceOf[BaseAggregateExec] &&
-        !u.isInstanceOf[QueryStageExec] && !u.isInstanceOf[Exchange] =>
-        movesBands(u.child)
-      case _ => false
-    })
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     graft.ext.Dedup.writeLshIndex(docs.where(col("doc_id") < 400),
       "doc_id", "text", "planshape_q72b_idx")
@@ -361,9 +329,9 @@ class PlanShapeSpec extends AnyFunSuite {
       val df = graft.ext.Dedup.lshPairsAgainstIndex(
         batch, "doc_id", "text", "planshape_q72b_idx")
       df.collect()
-      val all = nodes(df.queryExecution.executedPlan)
-      assert(all.exists(isBandsScan), "probe must read the stored band table")
-      val overBands = all.collect { case e: Exchange if movesBands(e.child) => e }
+      val (scanned, overBands) = PlanShapeSpec.exchangesOverScan(
+        df.queryExecution.executedPlan, "planshape_q72b_idx_bands")
+      assert(scanned, "probe must read the stored band table")
       assert(overBands.isEmpty,
         s"the stored band table must not enter an exchange:\n${overBands.mkString("\n")}")
     } finally Seq("planshape_q72b_idx_bands", "planshape_q72b_idx_shingles")
@@ -634,5 +602,45 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(!s.fields.forall(_.dataType == BinaryType),
         s"$name buffer must not serialize as an opaque binary blob: $s")
     }
+  }
+}
+
+object PlanShapeSpec {
+  import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan,
+    UnaryExecNode, UnionExec}
+  import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+  import org.apache.spark.sql.execution.exchange.Exchange
+
+  /** Whether `plan` scans catalog table `table`, and the exchanges
+    * (shuffle or broadcast) that move that scan's own rows.  Looks at
+    * every node of the initial AND the final adaptive plan (whether a
+    * side needs a shuffle is decided at planning; AQE may re-plan the
+    * join afterwards), descending into AQE stages and the cached
+    * plans behind in-memory scans. */
+  def exchangesOverScan(plan: SparkPlan, table: String): (Boolean, Seq[Exchange]) = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.initialPlan) ++ nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    def isScan(p: SparkPlan): Boolean = p match {
+      case f: FileSourceScanExec => f.tableIdentifier.exists(_.table == table)
+      case _ => false
+    }
+    // the rows `p` outputs are the scan's own rows: descend only
+    // through row-preserving operators — a join's or aggregate's
+    // output, a nested stage or a cache is other data
+    def moves(p: SparkPlan): Boolean = isScan(p) || (p match {
+      case _: UnionExec => p.children.exists(moves)
+      case u: UnaryExecNode if !u.isInstanceOf[BaseAggregateExec] &&
+        !u.isInstanceOf[QueryStageExec] && !u.isInstanceOf[Exchange] =>
+        moves(u.child)
+      case _ => false
+    })
+    val all = nodes(plan)
+    (all.exists(isScan), all.collect { case e: Exchange if moves(e.child) => e })
   }
 }

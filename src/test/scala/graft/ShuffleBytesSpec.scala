@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.PipelineQueries
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,21 +25,7 @@ class ShuffleBytesSpec extends AnyFunSuite {
     * double-billed. */
   private def shuffleBytes(body: => Unit): Long = {
     spark.catalog.clearCache() // cold operator, like Bench's timing
-    val total = new java.util.concurrent.atomic.AtomicLong
-    val l = new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        total.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    // drain BEFORE registering too: stage-completed events still queued
-    // from earlier tests/suites would otherwise be delivered to the new
-    // listener and billed to the measured body
-    org.apache.spark.sql.graftshim.Bridge.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.sql.graftshim.Bridge.drainListenerBus(spark)
-    } finally spark.sparkContext.removeSparkListener(l)
-    total.get()
+    graft.obs.Counters.of(spark)(body)._2.shuffleWriteBytes
   }
 
   private def assertCeiling(name: String, bytes: Long, ceiling: Long): Unit = {

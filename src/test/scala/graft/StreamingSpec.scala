@@ -575,7 +575,6 @@ class StreamingSpec extends AnyFunSuite {
     // second resolve, a re-shingled batch, a schema-inference read —
     // trips the ceiling
     import graft.ext.Dedup
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       .where(col("doc_id") < 250)
@@ -585,10 +584,6 @@ class StreamingSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("curjobs").toString
     val name = "curjobs_idx"
     Dedup.writeLshIndex(docs.where(lit(false)), "doc_id", "text", name)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
     def step(b: org.apache.spark.sql.DataFrame, k: Long,
         hook: (String, Long) => Unit): Unit =
       StreamingAgg.curationStep(b, k, "doc_id", "text", scoreOf, "q",
@@ -597,13 +592,11 @@ class StreamingSpec extends AnyFunSuite {
     try {
       // batch 1 takes the bootstrap path; batch 2 is the measured one
       step(docs.where(col("doc_id") < mid), 1L, (_, _) => ())
-      org.apache.spark.sql.graftshim.Bridge.drainListenerBus(spark)
-      spark.sparkContext.addSparkListener(l)
-      val perLayer = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-      try step(docs.where(col("doc_id") >= mid), 2L, (layer, _) => {
-        org.apache.spark.sql.graftshim.Bridge.drainListenerBus(spark)
-        perLayer(layer) = jobs.getAndSet(0)
-      }) finally spark.sparkContext.removeSparkListener(l)
+      val perLayer = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+      val window = graft.obs.Counters.open(spark)
+      try step(docs.where(col("doc_id") >= mid), 2L,
+        (layer, _) => perLayer(layer) = window.cut().jobs)
+      finally window.close()
       val total = perLayer.values.sum
       info(s"jobs per layer: ${perLayer.mkString(", ")}; total $total")
       assert(perLayer.keySet == Set("pairs", "assign", "survivors", "emit"))

@@ -2,7 +2,6 @@ package graft
 
 import graft.sources.TxLog
 import graft.streaming.StreamingAgg
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,17 +16,8 @@ class TxLogSchemaSpec extends AnyFunSuite {
 
   /** Spark jobs `body` submits. */
   private def jobsOf[T](body: => T): (T, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    org.apache.spark.sql.graftshim.Bridge.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      org.apache.spark.sql.graftshim.Bridge.drainListenerBus(spark)
-      (r, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (r, c) = graft.obs.Counters.of(spark)(body)
+    (r, c.jobs.toInt)
   }
 
   /** The schema parquet inference reports for `dirs`. */
